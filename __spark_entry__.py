@@ -40,7 +40,7 @@ def entry(spark: SparkSession) -> DataFrame:
     docs, media = corpus_fixture_tables(
         spark, "/root/testdata/sf0.001", model, max_docs=64
     )
-    return extract_spans(spark, docs, media, model, ocr_partitions=8)
+    return extract_spans(spark, docs, media, model)
 
 
 OCR_WIDE_MAX_DOCS = 60
@@ -62,7 +62,7 @@ def _ocr_extract_face(
     docs, media = corpus_fixture_tables(
         spark, sf_dir, model, max_docs=max_docs, face=face
     )
-    return extract_spans(spark, docs, media, model, ocr_partitions=16).select(
+    return extract_spans(spark, docs, media, model).select(
         "doc_id", "seq", "kind", "text", "media_ref", "offset"
     )
 
@@ -84,7 +84,7 @@ def _ocr_assembled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     model = get_model()
     docs, media = corpus_fixture_tables(spark, sf_dir, model, max_docs=OCR_MAX_DOCS)
-    extracted = extract_spans(spark, docs, media, model, ocr_partitions=16)
+    extracted = extract_spans(spark, docs, media, model)
     piece = F.concat_ws(
         "|", "kind", F.coalesce("media_ref", F.lit("-")), F.coalesce("text", F.lit(""))
     )

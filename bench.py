@@ -127,7 +127,7 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
     warm_python_workers(spark, cpus)
 
     def ocr_pass():
-        extracted = extract_spans(spark, docs, media, model, ocr_partitions=cpus * 2)
+        extracted = extract_spans(spark, docs, media, model)
         return extracted.agg(
             F.sum("glyph_count").alias("glyphs"),
             F.sum(F.length("text")).alias("chars"),

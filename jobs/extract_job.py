@@ -9,11 +9,10 @@
       --buckets 4096 --group-size 64
 
 At 10^12-document scale: buckets are the unit of resume (pick buckets >>
-executor count so stragglers rebalance), group-size bounds the work lost to
-a mid-run failure, and ocr-partitions sizes the media shuffle under
---media-join shuffle only (default 2x total cores via
-spark.sparkContext.defaultParallelism; the default broadcast_meta path
-never shuffles image bytes and takes no partition count).
+executor count so stragglers rebalance) and group-size bounds the work
+lost to a mid-run failure. Image bytes never shuffle: each group's
+media-span metadata broadcasts onto its own media slice, so the broadcast
+is about group-size / buckets of the corpus's span metadata.
 """
 
 from __future__ import annotations
@@ -22,50 +21,36 @@ import argparse
 
 
 def main() -> None:
-    p = argparse.ArgumentParser()
+    p = argparse.ArgumentParser(
+        description="Resumable, bucketed OCR extraction of documents' media spans."
+    )
     p.add_argument("--documents", required=True)
     p.add_argument("--media", required=True)
     p.add_argument("--output", required=True)
     p.add_argument("--state", required=True)
     p.add_argument("--snapshot", required=True)
     p.add_argument("--run-id", required=True)
-    p.add_argument("--buckets", type=int, default=4096)
-    p.add_argument("--group-size", type=int, default=64)
+    p.add_argument("--buckets", type=int, default=4096,
+                   help="media_ref hash buckets; the unit of resume")
+    p.add_argument("--group-size", type=int, default=64,
+                   help="buckets per OCR job; each job broadcasts about "
+                   "group-size / buckets of the span metadata")
     p.add_argument("--model-dir", default=None)
-    p.add_argument(
-        "--ocr-partitions", type=int, default=None,
-        help="sizes the salted media repartition; ONLY applies with "
-        "--media-join shuffle (the default broadcast_meta path runs OCR on "
-        "the media table's natural parquet splits and ignores this). "
-        "Default under shuffle: 2x total cores.",
-    )
-    p.add_argument(
-        "--media-join", choices=("shuffle", "broadcast_meta"),
-        default="broadcast_meta",
-        help="broadcast_meta (default): span metadata broadcasts onto each "
-        "bucket's media slice, image bytes never shuffle; shuffle adds a "
-        "salted repartition before OCR for size-skewed bucket splits",
-    )
     args = p.parse_args()
 
     from newocr_spark.artifacts import get_model
     from newocr_spark.model import FontModel
     from newocr_spark.pipeline.session import build_session
-    from newocr_spark.pipeline.state import ExtractRunner, StateTable
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
 
     spark = build_session(app="newocr-extract")
     model = (
         FontModel.load(args.model_dir) if args.model_dir else get_model()
     )
-    ocr_parts = None
-    if args.media_join == "shuffle":
-        ocr_parts = args.ocr_partitions or spark.sparkContext.defaultParallelism * 2
-    elif args.ocr_partitions:
-        p.error("--ocr-partitions requires --media-join shuffle")
     runner = ExtractRunner(
-        spark, model, args.output, StateTable(spark, args.state),
+        spark, model, args.output, ParquetStateStore(spark, args.state),
         n_buckets=args.buckets, group_size=args.group_size,
-        ocr_partitions=ocr_parts, media_join=args.media_join,
     )
     docs = spark.read.parquet(args.documents)
     media = spark.read.parquet(args.media)

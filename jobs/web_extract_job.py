@@ -37,16 +37,13 @@ def main() -> None:
     p.add_argument("--buckets", type=int, default=4096)
     p.add_argument("--group-size", type=int, default=64)
     p.add_argument("--model-dir", default=None)
-    p.add_argument(
-        "--media-join", choices=("shuffle", "broadcast_meta"),
-        default="broadcast_meta",
-    )
     args = p.parse_args()
 
     from newocr_spark.artifacts import get_model
     from newocr_spark.model import FontModel
     from newocr_spark.pipeline.session import build_session
-    from newocr_spark.pipeline.state import ExtractRunner, StateTable
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
     from newocr_spark.web.extract import html_to_documents
 
     spark = build_session(app="newocr-web-extract")
@@ -55,9 +52,8 @@ def main() -> None:
     docs = html_to_documents(corpus, html_col=args.html_col)
     media = spark.read.parquet(args.media)
     runner = ExtractRunner(
-        spark, model, args.output, StateTable(spark, args.state),
+        spark, model, args.output, ParquetStateStore(spark, args.state),
         n_buckets=args.buckets, group_size=args.group_size,
-        media_join=args.media_join,
     )
     stats = runner.run(docs, media, input_snapshot=args.snapshot, run_id=args.run_id)
     print(stats)

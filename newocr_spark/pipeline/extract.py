@@ -1,29 +1,39 @@
 """The flagship extraction job (SURVEY §3.1, Spark-native re-expression).
 
-    documents ──explode──▶ spans ──┬─ kind='text' ───────────────────────┐
-                                   └─ kind='media' ─ join(media) ─ salt ─┤
-                                        └ mapInPandas(OCR kernel) ───────┤
-                                                                         ▼
-                    unionByName ─ row_number per doc ─▶ extracted spans
-                    (groupBy(doc_id) + sort_array(collect_list(...)) for
-                     the assembled-document variant)
+    documents ──explode──▶ spans ──┬─ kind='text' ─────────────────────────┐
+                          (_split) └─ kind='media' (doc_id, offset,         │
+                                      media_ref) ──broadcast──┐             │
+    media (media_ref, png) ─────────────────────────────── join             │
+                  └ mapInPandas(OCR kernel) (_ocr) ─────────────────────────┤
+                                                                            ▼
+      text ∪ OCR ∪ missing-media error rows ─ row_number per doc (_assemble)
+          ─▶ extracted spans (groupBy(doc_id) + sort_array(collect_list(...))
+             for the assembled-document variant)
+
+One plan, two drivers: ``extract_spans`` runs ``_ocr`` over all media at
+once; ``ExtractRunner`` (pipeline/state.py) runs it per bucket group into
+a checkpointed intermediate and assembles from that. Both compose the same
+three helpers below.
 
 Physical design (SURVEY §4, "needs explicit engineering"):
   * the font model ships as ONE sc.broadcast of numpy arrays — the NN loop
     is numpy inside the Arrow UDF, zero per-lookup IO (vs the reference's
     per-character DB futures, OCRScan.java:209, OCRDatabaseManager.java:234-302);
-  * media work is repartitioned on xxhash64(media_ref) so one document's
-    many images and any size-skewed hot keys spread across the cluster
-    (the salted-repartition requirement of the north rule); AQE skew-join
-    handles the residual;
+  * the media-span metadata (doc_id, offset, media_ref) broadcasts onto the
+    media table, so image bytes never shuffle: OCR runs on the media
+    table's own size-balanced partitioning (parquet splits are bounded by
+    maxPartitionBytes). ``extract_spans`` broadcasts the whole slice's
+    metadata; ``ExtractRunner`` broadcasts only its current bucket group's
+    share, which shrinks the broadcast by about n_buckets / group_size;
+  * missing media is found by a metadata-only anti-join (no bytes move)
+    and surfaces as an error row, never a silently dropped span;
   * everything before/after the UDF is plain DataFrame ops — Catalyst
-    pushes the kind filter and column pruning into the parquet scan and
-    picks broadcast-hash for the small media dim automatically.
+    pushes the kind filter and column pruning into the parquet scan.
 
 At 100 TB: the documents scan is columnar with only (doc_id, spans) read;
-the only wide shuffles are the media repartition (sized by
-ocr_partitions) and the final per-doc assembly, both keyed on high-
-cardinality ids — no skewed groupBy keys.
+image bytes never shuffle; the wide shuffles carry only span metadata
+(the missing-media anti-join) and output rows (the per-doc assembly,
+keyed on the high-cardinality doc_id) — no skewed groupBy keys.
 """
 
 from __future__ import annotations
@@ -95,81 +105,72 @@ def make_ocr_udf(broadcast_model):
     return ocr_batches
 
 
-def extract_spans(
-    spark: SparkSession,
-    documents: DataFrame,
-    media: DataFrame,
-    model: FontModel,
-    ocr_partitions: int | None = None,
-    media_join: str = "broadcast_meta",
-) -> DataFrame:
-    """documents (doc_id, spans) + media (media_ref, png) → extracted spans
-    (doc_id, seq, kind, text, media_ref, offset, glyph_count, error).
-
-    media_join picks the physical strategy for attaching image bytes:
-
-    * ``broadcast_meta`` (default): broadcast the tiny (doc_id, offset,
-      media_ref) span-metadata side onto the media table, so the IMAGE
-      BYTES NEVER SHUFFLE — OCR runs on media's natural size-balanced
-      partitioning (parquet splits are bounded by maxPartitionBytes, so
-      per-task byte volume is already even). Missing media is detected by
-      a metadata-only anti-join (no bytes move) and surfaces as the same
-      error rows the shuffle path produces. Right whenever the media-span
-      metadata of the processed slice fits the broadcast budget — true for
-      per-bucket-group processing (pipeline/state.py) at any corpus size.
-    * ``shuffle``: spans-side left join + explicit salted repartition on
-      xxhash64(media_ref). The unbounded-slice fallback; also the shape a
-      bucketed/co-located table layout turns into a zero-exchange SMJ.
-    """
-    bmodel = spark.sparkContext.broadcast(model)
-
+def _split(documents: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """documents → (text-span rows in the output shape, media-span metadata
+    (doc_id, offset, media_ref))."""
     spans = documents.select(
         "doc_id", F.explode("spans").alias("span")
     ).select("doc_id", "span.kind", "span.text", "span.media_ref", "span.offset")
-
-    text_spans = (
-        spans.filter(F.col("kind") == "text")
-        .select(
-            "doc_id", "offset", F.lit("text").alias("kind"), "text",
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("long").alias("glyph_count"),
-            F.lit(0).cast("int").alias("line_count"),
-            F.lit(None).cast("double").alias("font_size_pt"),
-            F.lit(None).cast("string").alias("error"),
-        )
+    text_spans = spans.filter(F.col("kind") == "text").select(
+        "doc_id", "offset", F.lit("text").alias("kind"), "text",
+        F.lit(None).cast("string").alias("media_ref"),
+        F.lit(0).cast("long").alias("glyph_count"),
+        F.lit(0).cast("int").alias("line_count"),
+        F.lit(None).cast("double").alias("font_size_pt"),
+        F.lit(None).cast("string").alias("error"),
     )
-
     meta = spans.filter(F.col("kind") == "media").select(
         "doc_id", "offset", "media_ref"
     )
-    if media_join == "broadcast_meta":
-        # bytes stay put: inner-join media → broadcast(meta); missing media
-        # recovered via metadata-only anti-join (null png → error row)
-        with_png = media.select("media_ref", "png").join(
-            F.broadcast(meta), "media_ref", "inner"
-        ).select("doc_id", "offset", "media_ref", "png")
-        missing = meta.join(
-            media.select("media_ref"), "media_ref", "left_anti"
-        ).select(
-            "doc_id", "offset", "media_ref", F.lit(None).cast("binary").alias("png")
-        )
-        media_spans = with_png.unionByName(missing)
-    else:
-        media_spans = meta.join(media.select("media_ref", "png"), "media_ref", "left")
-        if ocr_partitions:
-            # spread size skew: hash the (unique) media_ref, never doc_id alone
-            media_spans = media_spans.repartition(
-                ocr_partitions, F.xxhash64("media_ref")
-            )
+    return text_spans, meta
 
-    ocr_spans = media_spans.mapInPandas(make_ocr_udf(bmodel), OCR_OUTPUT_SCHEMA)
 
-    result = text_spans.unionByName(ocr_spans)
+def _ocr(media: DataFrame, meta: DataFrame, bmodel) -> DataFrame:
+    """OCR rows for the media spans in ``meta`` whose bytes are in ``media``.
+    The metadata slice broadcasts onto the media rows, so image bytes never
+    shuffle and the UDF runs on the media table's own partitioning."""
+    return (
+        media.select("media_ref", "png")
+        .join(F.broadcast(meta), "media_ref", "inner")
+        .select("doc_id", "offset", "media_ref", "png")
+        .mapInPandas(make_ocr_udf(bmodel), OCR_OUTPUT_SCHEMA)
+    )
+
+
+def _assemble(
+    text_spans: DataFrame, ocr_spans: DataFrame, meta: DataFrame, media: DataFrame
+) -> DataFrame:
+    """text rows ∪ OCR rows ∪ missing-media error rows, numbered per doc.
+    Missing media is found by a metadata-only anti-join: no bytes move."""
+    missing = meta.join(media.select("media_ref"), "media_ref", "left_anti").select(
+        "doc_id", "offset", F.lit("text").alias("kind"),
+        F.lit(None).cast("string").alias("text"), "media_ref",
+        F.lit(0).cast("long").alias("glyph_count"),
+        F.lit(0).cast("int").alias("line_count"),
+        F.lit(None).cast("double").alias("font_size_pt"),
+        F.lit("ValueError: missing media bytes").alias("error"),
+    )
+    result = text_spans.unionByName(ocr_spans).unionByName(missing)
     seq = Window.partitionBy("doc_id").orderBy("offset")
     return result.withColumn("seq", (F.row_number().over(seq) - 1).cast("int")).select(
         "doc_id", "seq", "kind", "text", "media_ref", "offset",
         "glyph_count", "line_count", "font_size_pt", "error",
     )
+
+
+def extract_spans(
+    spark: SparkSession, documents: DataFrame, media: DataFrame, model: FontModel
+) -> DataFrame:
+    """documents (doc_id, spans) + media (media_ref, png) → extracted spans
+    (doc_id, seq, kind, text, media_ref, offset, glyph_count, line_count,
+    font_size_pt, error).
+
+    The whole slice's media-span metadata is broadcast; a corpus whose
+    metadata outgrows the broadcast budget goes through ExtractRunner
+    (pipeline/state.py), which bounds it per bucket group."""
+    text_spans, meta = _split(documents)
+    ocr_spans = _ocr(media, meta, spark.sparkContext.broadcast(model))
+    return _assemble(text_spans, ocr_spans, meta, media)
 
 
 def assemble_documents(extracted: DataFrame) -> DataFrame:

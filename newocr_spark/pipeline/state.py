@@ -13,19 +13,25 @@ keyed on the media table itself:
     partition-pruned scan instead of a full pass (a doc-keyed bucket
     can reference media anywhere, forcing every group to rescan all
     media — measured 4.4x overhead before this design);
-  * buckets are processed in groups; each group's OCR output lands in an
-    intermediate sink partitioned by bucket with dynamic partition
-    overwrite (idempotent — re-running a group replaces exactly its own
-    partitions); per-bucket metrics are aggregated from the WRITTEN rows
-    (never by re-executing the OCR plan);
+  * buckets are processed in groups. Each group runs the same OCR step
+    as ``extract_spans`` (pipeline/extract.py ``_ocr``) on its own slice:
+    the media rows AND the media-span metadata are both filtered to the
+    group's buckets, so each group broadcasts about group_size /
+    n_buckets of the corpus's span metadata (pick n_buckets to keep that
+    within the broadcast budget);
+  * each group's OCR output lands in an intermediate sink partitioned by
+    bucket with dynamic partition overwrite (idempotent — re-running a
+    group replaces exactly its own partitions); per-bucket metrics are
+    aggregated from the WRITTEN rows (never by re-executing the OCR plan);
   * after a group commits, one state row per bucket is appended with
     lineage (input snapshot, doc-id range) and metrics (docs, glyphs,
     errors, wall ms, attempt);
   * resume = read the state table, skip buckets already committed for the
     same input snapshot; everything else is recomputed;
-  * once all buckets are committed, the CHEAP assembly stage (text spans
-    pass-through + missing-media error rows + per-doc seq numbering) runs
-    once over the intermediate — idempotent full overwrite.
+  * once all buckets are committed, the CHEAP assembly stage — the same
+    ``_assemble`` as ``extract_spans``: text spans pass through, missing
+    media become error rows, per-doc seq numbering — runs once over the
+    intermediate — idempotent full overwrite.
 
 All writes and the state log go through the SpanSink / StateStore seam
 (pipeline/sinks.py): the shipped implementation is Parquet (this sandbox
@@ -46,11 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import FontModel
-from .sinks import STATE_SCHEMA, ParquetSpanSink, ParquetStateStore, SpanSink, StateStore
-
-
-class StateTable(ParquetStateStore):
-    """Back-compat name for the parquet StateStore implementation."""
+from . import extract
+from .sinks import ParquetSpanSink, SpanSink, StateStore
 
 
 @dataclass
@@ -63,12 +66,6 @@ class ExtractRunner:
     state: StateStore
     n_buckets: int = 16
     group_size: int = 4
-    ocr_partitions: int | None = None
-    # the runner always broadcasts the span metadata onto the bucket's
-    # media slice (image bytes never shuffle); "shuffle" additionally
-    # salt-repartitions the joined rows before OCR — useful when a
-    # bucket's natural file splits are size-skewed
-    media_join: str = "broadcast_meta"
     # test hook: raise after committing this many groups (simulated crash)
     fail_after_groups: int | None = None
     # sink seam: default parquet sinks derive from output_path; pass
@@ -97,25 +94,11 @@ class ExtractRunner:
         return f"{input_snapshot}#b{self.n_buckets}"
 
     def _read_intermediate(self) -> DataFrame:
-        from .extract import OCR_OUTPUT_SCHEMA
-
-        return self.ocr_sink.read(OCR_OUTPUT_SCHEMA + ", snapshot string, bucket int")
+        return self.ocr_sink.read(
+            extract.OCR_OUTPUT_SCHEMA + ", snapshot string, bucket int"
+        )
 
     def run(self, documents: DataFrame, media: DataFrame, input_snapshot: str, run_id: str) -> dict:
-        from pyspark.sql import Window
-
-        from .extract import OCR_OUTPUT_SCHEMA, make_ocr_udf
-
-        spark = self.spark
-        if self.ocr_partitions and self.media_join != "shuffle":
-            import warnings
-
-            warnings.warn(
-                "ocr_partitions only applies with media_join='shuffle'; the "
-                "default broadcast_meta path runs OCR on the media table's "
-                "natural parquet splits",
-                stacklevel=2,
-            )
         snap = self.snapshot_key(input_snapshot)
         done = self.state.completed_buckets(snap)
         attempt = self.state.attempts(snap) + 1
@@ -125,33 +108,19 @@ class ExtractRunner:
             for i in range(0, len(todo), self.group_size)
         ]
 
-        spans = documents.select(
-            "doc_id", F.explode("spans").alias("span")
-        ).select("doc_id", "span.kind", "span.text", "span.media_ref", "span.offset")
-        meta = spans.filter(F.col("kind") == "media").select(
-            "doc_id", "offset", "media_ref"
-        )
-        media_b = media.select("media_ref", "png").withColumn(
-            "bucket", self._bucket_of("media_ref")
-        )
-        bmodel = spark.sparkContext.broadcast(self.model)
+        text_spans, meta = extract._split(documents)
+        bmodel = self.spark.sparkContext.broadcast(self.model)
 
         committed = 0
         stats = {"groups_run": 0, "buckets_done": len(done)}
         for group in groups:
             t0 = time.time()
-            # media-keyed bucket filter: only this group's image bytes are
-            # read (a partition-pruned scan when media is stored bucketed)
-            part = media_b.filter(F.col("bucket").isin(group))
-            with_png = part.join(F.broadcast(meta), "media_ref", "inner").select(
-                "doc_id", "offset", "media_ref", "png"
-            )
-            if self.ocr_partitions and self.media_join == "shuffle":
-                with_png = with_png.repartition(
-                    self.ocr_partitions, F.xxhash64("media_ref")
-                )
+            # media-keyed bucket filter on both join sides: only this
+            # group's image bytes are read (a partition-pruned scan when
+            # media is stored bucketed) and only its metadata broadcasts
+            in_group = self._bucket_of("media_ref").isin(group)
             ocr = (
-                with_png.mapInPandas(make_ocr_udf(bmodel), OCR_OUTPUT_SCHEMA)
+                extract._ocr(media.filter(in_group), meta.filter(in_group), bmodel)
                 .withColumn("bucket", self._bucket_of("media_ref"))
                 .withColumn("snapshot", F.lit(snap))
             )
@@ -209,41 +178,16 @@ class ExtractRunner:
                 )
 
         # ---- assembly stage (cheap, idempotent): runs once all buckets are
-        # committed — text spans pass through, missing media become error
-        # rows (metadata-only anti-join), per-doc seq numbering
+        # committed, over the intermediate (never prior-snapshot rows)
         if stats["buckets_done"] >= self.n_buckets:
-            text_spans = (
-                spans.filter(F.col("kind") == "text")
-                .select(
-                    "doc_id", "offset", F.lit("text").alias("kind"), "text",
-                    F.lit(None).cast("string").alias("media_ref"),
-                    F.lit(0).cast("long").alias("glyph_count"),
-                    F.lit(0).cast("int").alias("line_count"),
-                    F.lit(None).cast("double").alias("font_size_pt"),
-                    F.lit(None).cast("string").alias("error"),
-                )
-            )
             ocr_all = (
                 self._read_intermediate()
-                .filter(F.col("snapshot") == snap)  # never prior-snapshot rows
+                .filter(F.col("snapshot") == snap)
                 .drop("bucket", "snapshot")
             )
-            missing = (
-                meta.join(media.select("media_ref"), "media_ref", "left_anti")
-                .select(
-                    "doc_id", "offset", F.lit("text").alias("kind"),
-                    F.lit(None).cast("string").alias("text"), "media_ref",
-                    F.lit(0).cast("long").alias("glyph_count"),
-                    F.lit(0).cast("int").alias("line_count"),
-                    F.lit(None).cast("double").alias("font_size_pt"),
-                    F.lit("ValueError: missing media bytes").alias("error"),
-                )
+            final = extract._assemble(text_spans, ocr_all, meta, media).withColumn(
+                "bucket", self._bucket_of("doc_id")
             )
-            result = text_spans.unionByName(ocr_all).unionByName(missing)
-            seq = Window.partitionBy("doc_id").orderBy("offset")
-            final = result.withColumn(
-                "seq", (F.row_number().over(seq) - 1).cast("int")
-            ).withColumn("bucket", self._bucket_of("doc_id"))
             # FULL overwrite: the assembly is the one stage allowed to
             # rewrite everything — a dynamic/partition overwrite of a
             # shrunken snapshot would leave prior-run output partitions in

@@ -67,7 +67,6 @@ def stream_extract(
     output_path: str,
     checkpoint_path: str,
     schema=None,
-    ocr_partitions: int | None = None,
     trigger_once: bool = True,
 ):
     """Start a streaming query: new document parquet files → extracted spans.
@@ -81,9 +80,7 @@ def stream_extract(
     stream = spark.readStream.schema(schema).parquet(documents_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = extract_spans(
-            spark, batch_df, media, model, ocr_partitions=ocr_partitions
-        )
+        extracted = extract_spans(spark, batch_df, media, model)
         _idempotent_append(extracted, output_path, batch_id)
 
     writer = stream.writeStream.foreachBatch(process_batch).option(

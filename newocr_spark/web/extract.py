@@ -434,7 +434,7 @@ def q_web_extract(
     _docs, media = corpus_fixture_tables(spark, sf_dir, model, max_docs=max_docs)
     corpus = _corpus(spark, sf_dir, max_docs, partitions)
     docs = html_to_documents(corpus)
-    return extract_spans(spark, docs, media, model, ocr_partitions=16).select(
+    return extract_spans(spark, docs, media, model).select(
         "doc_id", "seq", "kind", "text", "media_ref", "offset"
     )
 

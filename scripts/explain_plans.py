@@ -21,7 +21,7 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 CHECKS = {
     "ocr_extract": (
-        "broadcast_meta strategy: the tiny span-metadata side broadcasts "
+        "the tiny span-metadata side broadcasts "
         "onto media (image bytes never shuffle), MapInPandas runs on the "
         "media table's own partitioning; final sort+window per doc",
         ["MapInPandas", "BroadcastHashJoin"],

@@ -84,7 +84,7 @@ def child(
     warm_python_workers(spark, cpus)
 
     def one_pass(d, m):
-        out = extract_spans(spark, d, m, model, ocr_partitions=cpus * 4)
+        out = extract_spans(spark, d, m, model)
         return out.agg(
             F.sum("glyph_count").alias("glyphs"),
             F.sum(F.length("text")).alias("chars"),
@@ -123,8 +123,8 @@ def child(
     # ---- skew-adversarial corpus (VERDICT r2 #6) ----
     # FIXTURES.md's skew cases, bench-measured: ~1% of docs carry a
     # multi-line image ~10x the pixels of a normal span, and ONE doc owns
-    # 100 media refs. Both media-join strategies are timed — this is the
-    # exact workload the salt/broadcast_meta design exists for.
+    # 100 media refs — the workload that running OCR on the media table's
+    # own partitioning (image bytes never shuffle) has to absorb.
     from newocr_spark.codecs.png import encode_png
     from newocr_spark.fixtures import LOREM_LINES
     from newocr_spark.font.render import render_text_image
@@ -185,12 +185,9 @@ def child(
     ctl_docs, ctl_media, n_ctl = replicated(replicate)
     skew = {"docs": int(n_skew)}
 
-    def timed(docs_df, media_df, strategy):
+    def timed(docs_df, media_df):
         def one():
-            out = extract_spans(
-                spark, docs_df, media_df, model,
-                ocr_partitions=cpus * 4, media_join=strategy,
-            )
+            out = extract_spans(spark, docs_df, media_df, model)
             return out.agg(F.sum("glyph_count")).collect()[0]
 
         one()  # JVM/worker state is already hot; one warm pass settles the plan
@@ -198,22 +195,21 @@ def child(
         one()
         return time.time() - t0
 
-    ctl_wall = timed(ctl_docs, ctl_media, "broadcast_meta")
+    ctl_wall = timed(ctl_docs, ctl_media)
     skew["control"] = {
         "wall_sec": round(ctl_wall, 3),
         "docs_per_sec": round(n_ctl / ctl_wall, 2),
     }
     ctl_docs.unpersist()
     ctl_media.unpersist()
-    for strategy in ("broadcast_meta", "shuffle"):
-        w = timed(skew_docs, skew_media, strategy)
-        skew[strategy] = {
-            "wall_sec": round(w, 3),
-            "docs_per_sec": round(n_skew / w, 2),
-            # within-session skew penalty: how much slower the skewed
-            # corpus runs than the same-size uniform one, same JVM
-            "penalty_vs_control": round(w / ctl_wall, 3),
-        }
+    w = timed(skew_docs, skew_media)
+    skew["skewed"] = {
+        "wall_sec": round(w, 3),
+        "docs_per_sec": round(n_skew / w, 2),
+        # within-session skew penalty: how much slower the skewed
+        # corpus runs than the same-size uniform one, same JVM
+        "penalty_vs_control": round(w / ctl_wall, 3),
+    }
     skew_docs.unpersist()
     skew_media.unpersist()
 
@@ -363,15 +359,14 @@ def orchestrate(
                     > best["skew"]["control"]["docs_per_sec"]
                 ):
                     best["skew"]["control"] = cur["skew"]["control"]
-                for strat in ("broadcast_meta", "shuffle"):
-                    b, c = best["skew"][strat], cur["skew"][strat]
-                    if c["docs_per_sec"] > b["docs_per_sec"]:
-                        b["wall_sec"] = c["wall_sec"]
-                        b["docs_per_sec"] = c["docs_per_sec"]
-                    # the penalty is a within-session ratio: best-of is min
-                    b["penalty_vs_control"] = min(
-                        b["penalty_vs_control"], c["penalty_vs_control"]
-                    )
+                b, c = best["skew"]["skewed"], cur["skew"]["skewed"]
+                if c["docs_per_sec"] > b["docs_per_sec"]:
+                    b["wall_sec"] = c["wall_sec"]
+                    b["docs_per_sec"] = c["docs_per_sec"]
+                # the penalty is a within-session ratio: best-of is min
+                b["penalty_vs_control"] = min(
+                    b["penalty_vs_control"], c["penalty_vs_control"]
+                )
                 best["skew"]["docs"] = cur["skew"]["docs"]
 
     lo, hi = levels
@@ -381,14 +376,11 @@ def orchestrate(
     w_lo = results[lo]["web_docs_per_sec"]
     w_hi = results[hi]["web_docs_per_sec"]
     web_eff = w_hi / ((hi / lo) * w_lo)
-    skew_eff = {
-        strat: round(
-            results[hi]["skew"][strat]["docs_per_sec"]
-            / ((hi / lo) * results[lo]["skew"][strat]["docs_per_sec"]),
-            3,
-        )
-        for strat in ("broadcast_meta", "shuffle")
-    }
+    skew_eff = round(
+        results[hi]["skew"]["skewed"]["docs_per_sec"]
+        / ((hi / lo) * results[lo]["skew"]["skewed"]["docs_per_sec"]),
+        3,
+    )
     raw = measure_raw_ceiling(levels)
     raw_eff = raw[hi] / ((hi / lo) * raw[lo])
     summary = {
@@ -453,7 +445,8 @@ confirms it).
 Skew-adversarial corpus (FIXTURES.md skew cases, bench-measured): the
 replicated corpus PLUS ~1% of docs carrying a 20-line image (~10x the
 pixels of a normal span) and ONE doc owning 100 media refs — the exact
-workload the media-join design exists for. A same-size NO-skew control
+workload that running OCR on the media table's own partitioning has to
+absorb. A same-size NO-skew control
 runs in the SAME session at each level, because this VM's
 session-to-session variance exceeds the skew effect: the load-bearing
 metric is the within-session skew PENALTY (skew wall ÷ control wall) and
@@ -463,19 +456,16 @@ not turn the skew into stragglers).
 | variant | docs | local[{lo}] wall (s) | local[{hi}] wall (s) | penalty lo | penalty hi |
 |---|---|---|---|---|---|
 | control (uniform, same size) | {r_lo["skew"]["docs"]} | {r_lo["skew"]["control"]["wall_sec"]} | {r_hi["skew"]["control"]["wall_sec"]} | 1.0 | 1.0 |
-| broadcast_meta (bytes never shuffle) | {r_lo["skew"]["docs"]} | {r_lo["skew"]["broadcast_meta"]["wall_sec"]} | {r_hi["skew"]["broadcast_meta"]["wall_sec"]} | {r_lo["skew"]["broadcast_meta"]["penalty_vs_control"]:.3f} | {r_hi["skew"]["broadcast_meta"]["penalty_vs_control"]:.3f} |
-| shuffle (salted xxhash64(media_ref)) | {r_lo["skew"]["docs"]} | {r_lo["skew"]["shuffle"]["wall_sec"]} | {r_hi["skew"]["shuffle"]["wall_sec"]} | {r_lo["skew"]["shuffle"]["penalty_vs_control"]:.3f} | {r_hi["skew"]["shuffle"]["penalty_vs_control"]:.3f} |
+| skewed (bytes never shuffle) | {r_lo["skew"]["docs"]} | {r_lo["skew"]["skewed"]["wall_sec"]} | {r_hi["skew"]["skewed"]["wall_sec"]} | {r_lo["skew"]["skewed"]["penalty_vs_control"]:.3f} | {r_hi["skew"]["skewed"]["penalty_vs_control"]:.3f} |
 
-(Cross-session raw skew efficiency {lo}→{hi}: broadcast_meta
-{skew_eff["broadcast_meta"]:.3f}, shuffle {skew_eff["shuffle"]:.3f} —
-interpret against the same-session penalties and the hardware ceiling
-above, not in isolation.)
+(Cross-session raw skew efficiency {lo}→{hi}: {skew_eff:.3f} — interpret
+against the same-session penalties and the hardware ceiling above, not in
+isolation.)
 
-Why skew does not break either strategy: big images land in distinct
-media rows spread round-robin across cpus*4 partitions (broadcast_meta
-runs OCR on that partitioning directly; shuffle re-spreads by hashing the
-UNIQUE media_ref, so the hot doc's 100 images scatter instead of
-hot-spotting one task), and per-task byte volume stays bounded — no
+Why skew does not break the plan: big images land in distinct media rows
+spread round-robin across cpus*4 partitions and OCR runs on that
+partitioning directly, so the hot doc's 100 images scatter instead of
+hot-spotting one task, and per-task byte volume stays bounded — no
 partition ever holds more than a few large images.
 
 Methodology (what makes the two levels a fair N vs 4N stand-in):
@@ -499,8 +489,8 @@ Workload notes:
   CC segmentation → 17-seg featurization → broadcast-NN → mergence →
   spacing → span re-assembly) via `extract_spans`, forced with an
   aggregate over every output column;
-- media attaches via the `broadcast_meta` join strategy: the span
-  metadata broadcasts, the image bytes NEVER shuffle, and OCR runs on the
+- media attaches by broadcasting the span metadata onto the media
+  table: the image bytes NEVER shuffle, and OCR runs on the
   media table's own size-balanced partitioning (cpus*4 partitions → 4
   task waves smooth stragglers);
 - fixture rendering happens driver-side before the clock starts, and the

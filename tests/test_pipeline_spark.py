@@ -30,7 +30,7 @@ def test_extract_matches_golden(spark, font_model, fixture_dir):
     media = spark.read.parquet(f"{fixture_dir}/media.parquet")
     golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
 
-    extracted = extract_spans(spark, docs, media, font_model, ocr_partitions=8)
+    extracted = extract_spans(spark, docs, media, font_model)
     got = _spans_by_doc(extracted)
     exp = _spans_by_doc(golden)
     assert got == exp  # exact span-sequence equality, every doc
@@ -60,9 +60,9 @@ def _make_state(spark, tmp_path, kind):
         from newocr_spark.pipeline.sinks import SqliteStateStore
 
         return SqliteStateStore(spark, str(tmp_path / "state.db"))
-    from newocr_spark.pipeline.state import StateTable
+    from newocr_spark.pipeline.sinks import ParquetStateStore
 
-    return StateTable(spark, str(tmp_path / "state"))
+    return ParquetStateStore(spark, str(tmp_path / "state"))
 
 
 @pytest.mark.parametrize("store", ["parquet", "sqlite"])
@@ -123,14 +123,15 @@ def test_no_stale_rows_across_snapshots(spark, font_model, fixture_dir, tmp_path
     not leak prior-snapshot rows: buckets with zero media in the new run
     keep their old partition directories (dynamic overwrite never touches
     them), so the assembly's snapshot filter is what protects the output."""
-    from newocr_spark.pipeline.state import ExtractRunner, StateTable
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
 
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
     media = spark.read.parquet(f"{fixture_dir}/media.parquet")
     golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
 
     out = str(tmp_path / "out")
-    state = StateTable(spark, str(tmp_path / "state"))
+    state = ParquetStateStore(spark, str(tmp_path / "state"))
     runner = ExtractRunner(spark, font_model, out, state, n_buckets=8, group_size=4)
     runner.run(docs, media, input_snapshot="snap-A", run_id="rA")
     assert runner.read_output().count() == golden.count()
@@ -154,14 +155,15 @@ def test_bucket_count_change_is_isolated(spark, font_model, fixture_dir, tmp_pat
     """Changing n_buckets over the same output path re-keys the checkpoint
     (snapshot_key folds it in), so old-bucketing intermediates are ignored
     rather than mixed in."""
-    from newocr_spark.pipeline.state import ExtractRunner, StateTable
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
 
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
     media = spark.read.parquet(f"{fixture_dir}/media.parquet")
     golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
 
     out = str(tmp_path / "out")
-    state = StateTable(spark, str(tmp_path / "state"))
+    state = ParquetStateStore(spark, str(tmp_path / "state"))
     r8 = ExtractRunner(spark, font_model, out, state, n_buckets=8, group_size=8)
     r8.run(docs, media, input_snapshot="s", run_id="r1")
     r4 = ExtractRunner(spark, font_model, out, state, n_buckets=4, group_size=4)
@@ -170,41 +172,81 @@ def test_bucket_count_change_is_isolated(spark, font_model, fixture_dir, tmp_pat
     assert _spans_by_doc(r4.read_output()) == _spans_by_doc(golden)
 
 
-@pytest.mark.parametrize("strategy", ["broadcast_meta", "shuffle"])
-def test_missing_media_error_rows(spark, font_model, fixture_dir, strategy):
+@pytest.mark.parametrize("entry", ["extract_spans", "ExtractRunner"])
+def test_missing_media_error_rows(spark, font_model, fixture_dir, tmp_path, entry):
     """A media span whose media_ref has no media row must surface as an
-    error row (never silently vanish) — identically in both join
-    strategies."""
+    error row (never silently vanish) — the same row from both entry
+    points, with every other span equal to golden."""
     from newocr_spark.pipeline.extract import extract_spans
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
 
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
     media = spark.read.parquet(f"{fixture_dir}/media.parquet")
+    golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
     # drop one referenced media row
     victim = media.select("media_ref").first().media_ref
     pruned = media.filter(F.col("media_ref") != victim)
 
-    extracted = extract_spans(
-        spark, docs, pruned, font_model, ocr_partitions=8, media_join=strategy
-    )
-    errs = extracted.filter(F.col("error").isNotNull()).collect()
-    assert [e.media_ref for e in errs] == [victim]
-    assert "missing media bytes" in errs[0].error
-    # every other span still present and clean
-    total = extracted.count()
-    golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
-    assert total == golden.count()
+    if entry == "extract_spans":
+        extracted = extract_spans(spark, docs, pruned, font_model)
+    else:
+        runner = ExtractRunner(
+            spark, font_model, str(tmp_path / "out"),
+            ParquetStateStore(spark, str(tmp_path / "state")), n_buckets=4, group_size=2,
+        )
+        runner.run(docs, pruned, input_snapshot="missing", run_id="r1")
+        extracted = runner.read_output()
+
+    cols = ("doc_id", "seq", "kind", "text", "media_ref", "glyph_count", "error")
+    errs = [tuple(r) for r in extracted.filter(F.col("error").isNotNull()).select(*cols).collect()]
+    (gold,) = golden.filter(F.col("media_ref") == victim).collect()
+    assert errs == [
+        (gold.doc_id, gold.seq, "text", None, victim, 0, "ValueError: missing media bytes")
+    ]
+    # every other span still present and equal to golden
+    others = F.col("media_ref").isNull() | (F.col("media_ref") != victim)
+    assert _spans_by_doc(extracted.filter(others)) == _spans_by_doc(golden.filter(others))
 
 
-def test_join_strategies_agree(spark, font_model, fixture_dir):
-    """broadcast_meta and shuffle produce identical span sequences."""
-    from newocr_spark.pipeline.extract import extract_spans
+def test_runner_broadcasts_only_its_groups_metadata(
+    spark, font_model, fixture_dir, tmp_path, monkeypatch
+):
+    """Each bucket group's OCR join gets only the media-span metadata whose
+    media_ref falls in that group's buckets, not the whole corpus's."""
+    from newocr_spark.pipeline import extract
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
 
+    seen = []
+    real_ocr = extract._ocr
+
+    def spy(media, meta, bmodel):
+        seen.append(sorted(tuple(r) for r in meta.collect()))
+        return real_ocr(media, meta, bmodel)
+
+    monkeypatch.setattr(extract, "_ocr", spy)
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
     media = spark.read.parquet(f"{fixture_dir}/media.parquet")
-    a = extract_spans(spark, docs, media, font_model, media_join="broadcast_meta")
-    b = extract_spans(spark, docs, media, font_model, ocr_partitions=8,
-                      media_join="shuffle")
-    assert _spans_by_doc(a) == _spans_by_doc(b)
+    runner = ExtractRunner(
+        spark, font_model, str(tmp_path / "out"),
+        ParquetStateStore(spark, str(tmp_path / "state")), n_buckets=4, group_size=2,
+    )
+    runner.run(docs, media, input_snapshot="bound", run_id="r1")
+
+    spans = (
+        docs.select("doc_id", F.explode("spans").alias("s"))
+        .filter(F.col("s.kind") == "media")
+        .select("doc_id", "s.offset", "s.media_ref")
+        .withColumn("bucket", F.expr("pmod(xxhash64(media_ref), 4)"))
+        .collect()
+    )
+    want = [
+        sorted((r.doc_id, r.offset, r.media_ref) for r in spans if r.bucket in group)
+        for group in ([0, 1], [2, 3])
+    ]
+    assert seen == want
+    assert all(0 < len(g) < len(spans) for g in seen)
 
 
 @pytest.mark.parametrize("fmt", ["json", "csv"])
@@ -232,8 +274,8 @@ def test_runner_routes_through_sink_seam(spark, font_model, fixture_dir, tmp_pat
     SpanSink/StateStore interfaces (pipeline/sinks.py), so an Iceberg
     implementation is a drop-in. A recording wrapper proves the runner
     never writes around the seam and still produces the golden output."""
-    from newocr_spark.pipeline.sinks import ParquetSpanSink
-    from newocr_spark.pipeline.state import ExtractRunner, StateTable
+    from newocr_spark.pipeline.sinks import ParquetSpanSink, ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
 
     calls = []
 
@@ -251,7 +293,7 @@ def test_runner_routes_through_sink_seam(spark, font_model, fixture_dir, tmp_pat
     golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
     out = str(tmp_path / "out")
     runner = ExtractRunner(
-        spark, font_model, out, StateTable(spark, str(tmp_path / "state")),
+        spark, font_model, out, ParquetStateStore(spark, str(tmp_path / "state")),
         n_buckets=4, group_size=2,
         ocr_sink=SpySink(spark, out + "_ocr"),
         out_sink=SpySink(spark, out),

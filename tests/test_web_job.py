@@ -39,11 +39,12 @@ def test_web_resume_no_dup_no_loss(spark, font_model, web_inputs, tmp_path):
     """Crash mid-run, resume, and the checkpointed pipeline's output equals
     the direct (single-shot) extraction of the same inputs."""
     from newocr_spark.pipeline.extract import extract_spans
-    from newocr_spark.pipeline.state import ExtractRunner, StateTable
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
 
     docs, media = web_inputs
     out = str(tmp_path / "out")
-    state = StateTable(spark, str(tmp_path / "state"))
+    state = ParquetStateStore(spark, str(tmp_path / "state"))
     runner = ExtractRunner(
         spark, font_model, out, state, n_buckets=8, group_size=2,
         fail_after_groups=1,
