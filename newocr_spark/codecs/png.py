@@ -122,8 +122,16 @@ def decode_png(buf: bytes) -> np.ndarray:
         raise ValueError("missing IHDR")
     channels = 1 if color_type == 0 else 3
     stride = w * channels
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    raw = raw.reshape(h, 1 + stride)
+    # inflate at most the h * (1 + stride) bytes the header declares, so a
+    # small stream cannot expand into an unbounded buffer
+    size = h * (1 + stride)
+    inflater = zlib.decompressobj()
+    data = inflater.decompress(bytes(idat), size)
+    if len(data) < size:
+        raise ValueError(f"PNG data too short: {len(data)} of {size} bytes")
+    if inflater.unconsumed_tail:
+        raise ValueError(f"PNG data longer than the {size} bytes its header declares")
+    raw = np.frombuffer(data, dtype=np.uint8).reshape(h, 1 + stride)
     if bool((raw[:, 0] != 0).any()):
         pixels = _unfilter(raw, h, stride, channels)
     else:  # fast path: all filter-0 (what encode_png emits)

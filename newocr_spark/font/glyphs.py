@@ -222,8 +222,8 @@ def _hand_pieces(hand: dict[str, np.ndarray]) -> list[tuple[np.ndarray, np.ndarr
 
     stats = []
     for g in hand.values():
-        for comp in connected_components(g):
-            stats.append(_class_stats(comp.grid))
+        comps = connected_components(g)
+        stats.extend(_class_stats(piece) for piece in comps.grids(range(len(comps))))
     return stats
 
 

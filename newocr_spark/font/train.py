@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..kernel.ccl import Component, connected_components
+from ..kernel.ccl import connected_components
 from ..kernel.features import featurize
 from ..kernel.grid import binarize, rows_populated
 from ..kernel.lines import line_bounds
@@ -40,22 +40,38 @@ _META_NAMES = (
 )
 
 
-def _overlap_x(a: Component, b: Component) -> bool:
+class _Piece:
+    """One trained glyph piece (SearchCharacter.java:39-77): its bbox and
+    features, plus the modifier/meta/letter the trainer assigns."""
+
+    __slots__ = ("x", "y", "width", "height", "features", "modifier", "meta", "letter")
+
+    def __init__(self, x: int, y: int, width: int, height: int, features: np.ndarray) -> None:
+        self.x, self.y, self.width, self.height = x, y, width, height
+        self.features = features
+        self.modifier = 0
+        self.meta: dict[str, float] = {}
+        self.letter: str | None = None
+
+
+def _overlap_x(a: _Piece, b: _Piece) -> bool:
     return a.x + a.width > b.x and b.x + b.width > a.x
 
 
-def _letters_during_training(grid: np.ndarray, config: FontConfig) -> list[tuple[int, int, list[Component]]]:
-    """→ [(topY, bottomY, X-sorted components with modifiers/meta assigned)]."""
+def _letters_during_training(grid: np.ndarray, config: FontConfig) -> list[tuple[int, int, list[_Piece]]]:
+    """→ [(topY, bottomY, X-sorted pieces with modifiers/meta assigned)]."""
     bounds = line_bounds(rows_populated(grid), config.max_percent_diff_to_merge)
     out = []
     for from_y, to_y in bounds:
-        sub = grid[from_y:to_y, :]
-        found = connected_components(sub)
-        for c in found:
-            c.y += from_y  # SearchCharacter(coords, 0, fromY) offset
-            c.extras["modifier"] = 0
-            c.extras["meta"] = {}
-            c.extras["features"] = featurize(c.grid)
+        comps = connected_components(grid[from_y:to_y, :])
+        found = [
+            # SearchCharacter(coords, 0, fromY) offset
+            _Piece(x, y + from_y, w, h, featurize(g))
+            for x, y, w, h, g in zip(
+                comps.x.tolist(), comps.y.tolist(), comps.width.tolist(),
+                comps.height.tolist(), comps.grids(range(len(comps))),
+            )
+        ]
         found.sort(key=lambda c: c.x)  # Collections.sort — stable
 
         ignored: set[int] = set()
@@ -75,11 +91,11 @@ def _letters_during_training(grid: np.ndarray, config: FontConfig) -> list[tuple
                     if current in ("!", "?"):
                         diff = part2.y - (base.y + base.height)
                         name = "distanceQuestion" if current == "?" else "distanceExclamation"
-                        base.extras["meta"][name] = diff / base.height
+                        base.meta[name] = diff / base.height
                     elif current in _CHAR_META:
                         diff = base.y - (part2.y + part2.height)
-                        base.extras["meta"][_CHAR_META[current]] = diff / base.height
-                part2.extras["modifier"] = inc
+                        base.meta[_CHAR_META[current]] = diff / base.height
+                part2.modifier = inc
                 inc += 1
                 ignored.add(id(part2))
         out.append((from_y, to_y, found))
@@ -139,13 +155,13 @@ def train_font(
         current_font_size = 12 * TRAIN_SCALES[line_no]
         letter_index = 0
         before_space_x = 0
-        first_quote: Component | None = None
-        next_measuring_space: Component | None = None
+        first_quote: _Piece | None = None
+        next_measuring_space: _Piece | None = None
 
         for sc in found:
             current = TRAIN_STRING[letter_index]
             letter_index += 1
-            modifier = sc.extras["modifier"]
+            modifier = sc.modifier
             revert_index = False
 
             if letter_index == 3:  # the quote (OCRTrain.java:155-168)
@@ -184,19 +200,19 @@ def train_font(
             if next_measuring_space is not None:  # custom spaces (:189-194)
                 width = sc.x - (next_measuring_space.x + next_measuring_space.width)
                 ratio = width / next_measuring_space.height
-                prev_char = next_measuring_space.extras["letter"]
+                prev_char = next_measuring_space.letter
                 custom_spaces.setdefault(prev_char, []).append(ratio)
                 next_measuring_space = None
             if current in config.special_spaces:
                 next_measuring_space = sc
-            sc.extras["letter"] = current
+            sc.letter = current
 
-            for name, meta in sc.extras["meta"].items():
+            for name, meta in sc.meta.items():
                 meta_lists[name].append(meta)
 
-            sc.extras["modifier"] = modifier
+            sc.modifier = modifier
             t = trained.setdefault((current, modifier), _Trained())
-            t.vectors.append(sc.extras["features"])
+            t.vectors.append(sc.features)
             t.widths.append(float(sc.width))
             t.heights.append(float(sc.height))
             if _sightings is not None:
@@ -212,7 +228,7 @@ def train_font(
                         "letter": current,
                         "modifier": int(modifier),
                         "seq": len(t.vectors) - 1,
-                        "segments": [float(x) for x in sc.extras["features"]],
+                        "segments": [float(x) for x in sc.features],
                         "width": float(sc.width) if has_wh else None,
                         "height": float(sc.height) if has_wh else None,
                         "center_off": float(half_line_ - (sc.y - top)),

@@ -8,154 +8,194 @@ bounding box and cropped pixel grid, discovered in raster order of each
 component's first-encountered pixel.
 
 We reproduce that contract with run-based two-pass labelling: horizontal
-runs per row are found vectorized (np.diff on the padded row bitmap), then
-union-find joins runs of adjacent rows whose column intervals touch within
-±1 (8-connectivity). This is O(runs α(runs)) with only small-Python work
-proportional to the number of runs, not pixels — no scipy in this env.
+runs per row are found vectorized (value changes of the flattened padded
+bitmap), then a vectorized union-find joins runs of adjacent rows whose
+column intervals touch within ±1 (8-connectivity). Python-level work is a
+handful of array passes per image, none per run or per pixel — no scipy
+in this env.
+
+Return form: one ``Components`` of arrays, never one object per glyph. The
+runs are sorted by component once (stable, so each component's runs stay
+in (row, start) order); the bboxes and pixel counts are ``reduceat``s over
+that order, and each component's runs are kept bbox-relative as rows of
+one compact int32 ``(row, start, end)`` array, cut by ``breaks``. A run is
+a maximal horizontal stretch of one component's pixels, so a component's
+runs determine its cropped grid and vice versa: ``signatures()`` is an
+exact key for (height, width, grid) that touches no grid. Grids are built
+only on demand (``grid(i)``, or ``grids(idx)`` for a whole batch of glyph
+cache misses at once, scattered into one shared buffer).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 import numpy as np
 
 
-@dataclass
-class Component:
-    """One glyph blob: bbox + cropped grid (SearchCharacter.java:39-77)."""
+class Components:
+    """The 8-connected components of one grid, in discovery order.
 
-    x: int
-    y: int
-    width: int
-    height: int
-    grid: np.ndarray  # (height, width) bool, cropped
-    pixel_count: int = 0
-    # carried through matching/mergence
-    extras: dict = field(default_factory=dict)
+    Component ``i`` has bbox ``(x[i], y[i], width[i], height[i])`` and
+    ``pixel_count[i]`` black pixels (SearchCharacter.java:39-77); its runs
+    are ``runs[breaks[i]:breaks[i + 1]]``, bbox-relative ``(row, start,
+    end_exclusive)`` int32 rows in (row, start) order.
+    """
+
+    __slots__ = ("x", "y", "width", "height", "pixel_count", "runs", "breaks")
+
+    def __init__(self, x, y, width, height, pixel_count, runs, breaks) -> None:
+        self.x = x
+        self.y = y
+        self.width = width
+        self.height = height
+        self.pixel_count = pixel_count
+        self.runs = runs
+        self.breaks = breaks
+
+    def __len__(self) -> int:
+        return len(self.x)
+
+    def signatures(self) -> list[bytes]:
+        """Per component: its runs' bytes. Equal (height, width, signature)
+        exactly when the cropped grids are equal."""
+        step = self.runs.itemsize * self.runs.shape[1]
+        buf = self.runs.tobytes()
+        b = (self.breaks * step).tolist()
+        return [buf[s:e] for s, e in zip(b[:-1], b[1:])]
+
+    def grid(self, i: int) -> np.ndarray:
+        """Cropped (height, width) bool grid of component ``i``."""
+        return self.grids([i])[0]
+
+    def grids(self, idx) -> list[np.ndarray]:
+        """Cropped bool grids of the components ``idx``, filled by one
+        vectorized run → pixel scatter into one buffer."""
+        idx = np.asarray(idx, dtype=np.int64)
+        h, w = self.height[idx], self.width[idx]
+        sizes = h * w
+        base = np.cumsum(sizes) - sizes
+        b0 = self.breaks[idx]
+        n_runs = self.breaks[idx + 1] - b0
+        r = self.runs[_concat_ranges(b0, n_runs)].astype(np.int64)
+        starts = np.repeat(base, n_runs) + r[:, 0] * np.repeat(w, n_runs) + r[:, 1]
+        buf = np.zeros(int(sizes.sum()), dtype=bool)
+        buf[_concat_ranges(starts, r[:, 2] - r[:, 1])] = True
+        return [
+            buf[s : s + n].reshape(hh, ww)
+            for s, n, hh, ww in zip(base.tolist(), sizes.tolist(), h.tolist(), w.tolist())
+        ]
 
 
-def _runs_per_row(grid: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _concat_ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """The ranges [starts[i], starts[i] + lengths[i]) concatenated."""
+    csum = np.cumsum(lengths) - lengths
+    return np.repeat(starts - csum, lengths) + np.arange(int(lengths.sum()))
+
+
+def _runs(grid: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
     """Vectorized horizontal run extraction.
 
-    Returns (row_idx, start_col, end_col_exclusive) arrays over all runs,
-    ordered by (row, start).
+    Returns (start, end_exclusive, K): every run's flat positions in the
+    grid padded with one background column on each side, in raster order,
+    and that padded row stride K. The padding keeps every run inside its
+    row, so the value changes of the flattened padded grid alternate run
+    start, run end; and ``row * K + col + 1`` is a row-major key in which
+    no probe keyed to one row can land in another.
     """
     h, w = grid.shape
     padded = np.zeros((h, w + 2), dtype=bool)
     padded[:, 1:-1] = grid
-    d = np.diff(padded.astype(np.int8), axis=1)
-    starts = np.nonzero(d == 1)
-    ends = np.nonzero(d == -1)
-    # np.nonzero returns row-major order, so starts/ends align pairwise per row
-    return starts[0], starts[1], ends[1]
+    flat = padded.ravel()
+    change = np.flatnonzero(flat[1:] != flat[:-1]) + 1
+    return change[0::2], change[1::2], w + 2
 
 
-def _union_pairs(rows: np.ndarray, starts: np.ndarray, ends: np.ndarray,
-                 height: int) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized 8-conn overlap pairs between runs of adjacent rows.
+def _overlaps_above(s: np.ndarray, e: np.ndarray, K: int):
+    """Vectorized 8-conn overlaps of each run with the runs of the row above.
 
     Runs within a row are sorted and disjoint, so for a run [sb, eb) in row
     r+1, the overlapping runs of row r form the contiguous index range
     [searchsorted(ends_r, sb), searchsorted(starts_r, eb, 'right')).
-    Per-row searches collapse into two GLOBAL searchsorted calls on
-    composite row-major keys (row*K + col, K > any col): every row's key
-    block is disjoint and internally sorted, so a probe keyed to row r-1
-    lands inside that row's segment automatically — no Python loop over
-    rows, no per-row slicing.
+    On the flat keys the per-row searches collapse into two GLOBAL
+    searchsorted calls: a probe shifted up one row (minus K) lands inside
+    that row's segment automatically — no Python loop over rows.
+
+    Returns (parent, extra_a, extra_b): each run's first overlapping run
+    above (itself when none), and the pairs of every further overlap.
     """
-    n = len(rows)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e
-    K = np.int64(int(ends.max()) + 2)
-    start_keys = rows.astype(np.int64) * K + starts
-    end_keys = rows.astype(np.int64) * K + ends
-    prev = (rows.astype(np.int64) - 1) * K
+    n = len(s)
     # overlap in row above: runs a with ea >= sb AND sa <= eb — half-open
     # runs touching at a column (ea == sb / sa == eb) are diagonal
     # neighbours, which 8-connectivity joins
-    lo = np.searchsorted(end_keys, prev + starts, side="left")
-    hi = np.searchsorted(start_keys, prev + ends, side="right")
-    # empty previous row → lo/hi land on the same segment boundary → 0
-    counts = np.maximum(hi - lo, 0)
-    total = int(counts.sum())
-    if total == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e
-    b_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
-    csum = np.cumsum(counts) - counts
-    a_idx = np.arange(total, dtype=np.int64) - np.repeat(csum, counts) + np.repeat(lo, counts)
-    return a_idx, b_idx
+    lo = np.searchsorted(e, s - K, side="left")
+    hi = np.searchsorted(s, e - K, side="right")
+    # no overlap above → lo/hi land on the same run boundary → 0
+    counts = hi - lo
+    parent = np.where(counts > 0, lo, np.arange(n))
+    extra = np.maximum(counts - 1, 0)
+    return parent, _concat_ranges(lo + 1, extra), np.repeat(np.arange(n), extra)
 
 
-def connected_components(grid: np.ndarray) -> list[Component]:
-    """8-connected components of a bool grid, in reference discovery order."""
-    if grid.size == 0:
-        return []
-    rows, starts, ends = _runs_per_row(grid)
-    n_runs = len(rows)
-    if n_runs == 0:
-        return []
-
-    pair_a, pair_b = _union_pairs(rows, starts, ends, grid.shape[0])
-    # min-label propagation with pointer jumping (vectorized union-find):
-    # converges to the per-component minimum run index
-    labels = np.arange(n_runs, dtype=np.int64)
+def _compress(labels: np.ndarray) -> np.ndarray:
+    """Pointer jumping until every run points straight at its root."""
     while True:
-        prev = labels.copy()
-        if len(pair_a):
-            np.minimum.at(labels, pair_a, labels[pair_b])
-            np.minimum.at(labels, pair_b, labels[pair_a])
-        labels = np.minimum(labels, labels[labels])
-        labels = np.minimum(labels, labels[labels])
-        if np.array_equal(labels, prev):
-            break
+        nxt = labels[labels]
+        if np.array_equal(nxt, labels):
+            return labels
+        labels = nxt
 
-    roots = labels
-    # root → discovery index, in (row, start) order of first run.
-    # np.unique sorts roots ascending; the root IS the component's first
-    # run index (minimum), so ascending == raster discovery order
-    first_seen, inverse = np.unique(roots, return_inverse=True)
-    comp_of_run = inverse
 
-    n_comp = len(first_seen)
-    min_x = np.full(n_comp, np.iinfo(np.int64).max, dtype=np.int64)
-    max_x = np.full(n_comp, -1, dtype=np.int64)
-    min_y = np.full(n_comp, np.iinfo(np.int64).max, dtype=np.int64)
-    max_y = np.full(n_comp, -1, dtype=np.int64)
-    counts = np.zeros(n_comp, dtype=np.int64)
-    np.minimum.at(min_x, comp_of_run, starts)
-    np.maximum.at(max_x, comp_of_run, ends - 1)
-    np.minimum.at(min_y, comp_of_run, rows)
-    np.maximum.at(max_y, comp_of_run, rows)
-    np.add.at(counts, comp_of_run, ends - starts)
+def _component_labels(s: np.ndarray, e: np.ndarray, K: int) -> np.ndarray:
+    """Per run: the minimum run index of its 8-connected component.
 
-    comps: list[Component] = []
-    for c in range(n_comp):
-        x0, x1 = int(min_x[c]), int(max_x[c])
-        y0, y1 = int(min_y[c]), int(max_y[c])
-        comps.append(
-            Component(
-                x=x0, y=y0,
-                width=x1 - x0 + 1, height=y1 - y0 + 1,
-                grid=np.zeros((y1 - y0 + 1, x1 - x0 + 1), dtype=bool),
-                pixel_count=int(counts[c]),
-            )
+    Vectorized union-find. Hanging every run off its first overlap above
+    gives a forest whose pointers all go to lower indices; the few further
+    overlaps (where a run joins two runs above, as at the foot of a 'u')
+    hook the larger of their two roots under the smaller until all agree.
+    Pointers only ever go down, so each root is its tree's minimum.
+    """
+    labels, extra_a, extra_b = _overlaps_above(s, e, K)
+    while True:
+        labels = _compress(labels)
+        ra, rb = labels[extra_a], labels[extra_b]
+        differ = ra != rb
+        if not differ.any():
+            return labels
+        ra, rb = ra[differ], rb[differ]
+        np.minimum.at(labels, np.maximum(ra, rb), np.minimum(ra, rb))
+
+
+def connected_components(grid: np.ndarray) -> Components:
+    """8-connected components of a bool grid, in reference discovery order."""
+    s, e, K = _runs(grid)
+    n_runs = len(s)
+    if n_runs == 0:
+        none = np.empty(0, dtype=np.int64)
+        return Components(
+            none, none, none, none, none, np.empty((0, 3), dtype=np.int32), np.zeros(1, np.int64)
         )
+    labels = _component_labels(s, e, K)
+    rows = s // K
+    starts = s - rows * K - 1
+    ends = e - rows * K - 1
 
-    # vectorized run → pixel expansion, then one fancy-index fill per comp
-    lengths = ends - starts
-    total = int(lengths.sum())
-    csum = np.cumsum(lengths) - lengths
-    px_col = np.repeat(starts, lengths) + (np.arange(total) - np.repeat(csum, lengths))
-    px_row = np.repeat(rows, lengths)
-    px_comp = np.repeat(comp_of_run, lengths)
-    order = np.argsort(px_comp, kind="stable")
-    px_row, px_col, px_comp = px_row[order], px_col[order], px_comp[order]
-    breaks = np.searchsorted(px_comp, np.arange(n_comp + 1))
-    for c in range(n_comp):
-        s, e = breaks[c], breaks[c + 1]
-        comp = comps[c]
-        comp.grid[px_row[s:e] - comp.y, px_col[s:e] - comp.x] = True
-    return comps
+    # the root IS the component's first run index (its minimum), so roots
+    # numbered in ascending order are numbered in raster discovery order
+    is_root = labels == np.arange(n_runs)
+    comp_of_run = (np.cumsum(is_root) - 1)[labels]
+    n_comp = int(is_root.sum())
+
+    order = np.argsort(comp_of_run, kind="stable")
+    comp_s = comp_of_run[order]
+    rows_s, starts_s, ends_s = rows[order], starts[order], ends[order]
+    breaks = np.zeros(n_comp + 1, dtype=np.int64)
+    np.cumsum(np.bincount(comp_s, minlength=n_comp), out=breaks[1:])
+    b0 = breaks[:-1]
+    # each component's runs are in (row, start) order: first/last rows bound y
+    y = rows_s[b0]
+    x = np.minimum.reduceat(starts_s, b0)
+    height = rows_s[breaks[1:] - 1] - y + 1
+    width = np.maximum.reduceat(ends_s, b0) - x
+    pixel_count = np.add.reduceat(ends_s - starts_s, b0)
+    ox = x[comp_s]
+    runs = np.stack([rows_s - y[comp_s], starts_s - ox, ends_s - ox], axis=1).astype(np.int32)
+    return Components(x, y, width, height, pixel_count, runs, breaks)

@@ -16,6 +16,18 @@ itself did the removal. The final cleanup pass (processLetter:88-108)
 relabels leftover dots to '.' and pops the next-closest NN match for pieces
 that should only exist merged.
 
+Piece-class neighbourhoods: every rule needs a piece-class letter and
+returns None, with no side effect, without one — the vertical rules a dot
+or horizontal line among the target and its x-overlap neighbours, the
+Apostrophe rule a vertical-line target, the Percent rule a percent-dot or
+percent-base target on a line that holds a percent base. So the x-overlap
+relation is built only for letters that x-overlap a dot or horizontal-line
+letter, and the horizontal rules visit only their possible targets, on
+lines that have one. This is exact, not a heuristic: labels change only
+through a merge, and a merged letter (amount_of_merges > 0) is refused by
+every rule, as target and as partner, so no letter can join a piece class
+mid-mergence; positions come from the relation built before any merge.
+
 Determinism note: the reference iterates ConcurrentHashMaps (nondeterministic
 order); we iterate letters in reading order (line insertion order, then
 position in line), and sort vertical relations by (y) with a stable sort —
@@ -25,6 +37,8 @@ deterministic, and identical to the reference where its behavior is defined.
 from __future__ import annotations
 
 from typing import TYPE_CHECKING
+
+import numpy as np
 
 from ..letters import APOSTROPHE_COMPARE_EXCLUDED
 
@@ -238,19 +252,63 @@ def _percent(ctx: _Ctx, target, data, pos):  # M4 — rules/PercentMergeRule.jav
     return [dot1, dot2]
 
 
-# name → (rule_fn, is_horizontal); names mirror the reference's rule
+def _vline_targets(ctx: _Ctx, line):
+    """The Apostrophe rule's first check: its target is a vertical line."""
+    return [l for l in line if ctx.is_vline(l)]
+
+
+def _percent_targets(ctx: _Ctx, line):
+    """Every Percent match has a percent-base letter among its three, and
+    its target is a percent dot or a percent base."""
+    if not any((l.letter, l.mod) in ctx.pbase for l in line):
+        return []
+    return [l for l in line if (l.letter, l.mod) in ctx.pdot or (l.letter, l.mod) in ctx.pbase]
+
+
+# name → (rule_fn, line_targets); names mirror the reference's rule
 # classes, registered reflectively from config
-# (HOCONFontConfiguration.java:156-170). The execution order comes from
+# (HOCONFontConfiguration.java:156-170). Vertical rules (line_targets None)
+# run over x-overlap relations; horizontal ones over line lists, visiting
+# only line_targets(ctx, line). The execution order comes from
 # FontConfig.merge_rules — its default is the computed priority order
 # UnderDot(-1), EqualVertical(-1), OverDot(1), Apostrophe(1), Percent(1)
 # (see module docstring).
 RULE_REGISTRY = {
-    "UnderDotMergeRule": (_under_dot, False),
-    "EqualVerticalMergeRule": (_equal_vertical, False),
-    "OverDotMergeRule": (_over_dot, False),
-    "ApostropheMergeRule": (_apostrophe, True),
-    "PercentMergeRule": (_percent, True),
+    "UnderDotMergeRule": (_under_dot, None),
+    "EqualVerticalMergeRule": (_equal_vertical, None),
+    "OverDotMergeRule": (_over_dot, None),
+    "ApostropheMergeRule": (_apostrophe, _vline_targets),
+    "PercentMergeRule": (_percent, _percent_targets),
 }
+
+
+def vertical_relations(ctx: _Ctx, letters) -> dict:
+    """id(letter) → every letter overlapping it in X (incl. itself), by Y,
+    for just the letters that x-overlap a dot or horizontal-line letter —
+    no vertical rule can fire on any other target (module docstring).
+
+    One vectorized interval test replaces the reference's parallel-stream
+    O(n^2) object loop (DefaultMergenceManager.java:140-152); the stable
+    (y, reading-order) sort matches its Comparator.comparingInt(getY).
+    """
+    n = len(letters)
+    xs = np.fromiter((l.x for l in letters), np.int64, n)
+    xe = np.fromiter((l.x + l.width for l in letters), np.int64, n)
+    piece = np.fromiter(
+        ((l.letter, l.mod) in ctx.dot or (l.letter, l.mod) in ctx.hline for l in letters),
+        bool, n,
+    )
+    pxs, pxe = xs[piece], xe[piece]
+    near = ((xe[:, None] > pxs[None, :]) & (pxe[None, :] > xs[:, None])).any(axis=1)
+    vertical = {}
+    if near.any():
+        ys = np.fromiter((l.y for l in letters), np.int64, n)
+        y_order = np.argsort(ys, kind="stable")
+        xs_o, xe_o = xs[y_order], xe[y_order]
+        for i in np.flatnonzero(near).tolist():
+            mask = (xe_o > xs[i]) & (xe[i] > xs_o)
+            vertical[id(letters[i])] = [letters[j] for j in y_order[mask].tolist()]
+    return vertical
 
 
 def run_mergence(sorted_lines, model):
@@ -258,26 +316,8 @@ def run_mergence(sorted_lines, model):
     ctx = _Ctx(model)
 
     all_letters = [l for _y, line in sorted_lines for l in line]  # reading order
-    # vertical relations: all letters overlapping in X (incl. self), by Y.
-    # One vectorized interval test replaces the reference's parallel-stream
-    # O(n^2) object loop (DefaultMergenceManager.java:140-152); the stable
-    # (y, reading-order) sort matches its Comparator.comparingInt(getY).
-    import numpy as np
-
-    n = len(all_letters)
-    xs = np.fromiter((l.x for l in all_letters), np.int64, n)
-    xe = np.fromiter((l.x + l.width for l in all_letters), np.int64, n)
-    ys = np.fromiter((l.y for l in all_letters), np.int64, n)
-    y_order = np.argsort(ys, kind="stable")
-    xs_o, xe_o = xs[y_order], xe[y_order]
-    vertical = {}
-    for i, l in enumerate(all_letters):
-        mask = (xe_o > xs[i]) & (xe[i] > xs_o)
-        vertical[id(l)] = [all_letters[j] for j in y_order[mask]]
-    line_of = {}
-    for _y, line in sorted_lines:
-        for l in line:
-            line_of[id(l)] = line  # shared list reference, as in the reference
+    vertical = vertical_relations(ctx, all_letters)
+    vertical_targets = [l for l in all_letters if id(l) in vertical]
 
     removed_global = set()
 
@@ -285,14 +325,18 @@ def run_mergence(sorted_lines, model):
         return {id(x): i for i, x in enumerate(lst)}
 
     for rule_name in model.config.merge_rules:
-        rule_fn, horizontal = RULE_REGISTRY[rule_name]
+        rule_fn, line_targets = RULE_REGISTRY[rule_name]
         removing: list = []
         removing_ids: set[int] = set()
-        if horizontal:
-            # iterate lines in insertion order = reading order
+        if line_targets is not None:
+            # iterate lines in insertion order = reading order, visiting
+            # only the targets the rule can fire on (module docstring)
             for _y, line in sorted_lines:
+                targets = line_targets(ctx, line)
+                if not targets:
+                    continue
                 pos_map = positions_of(line)
-                for letter in list(line):
+                for letter in targets:
                     lid = id(letter)
                     if lid in removed_global or lid in removing_ids:
                         continue
@@ -301,15 +345,14 @@ def run_mergence(sorted_lines, model):
                         for r in result:
                             removing.append(r)
                             removing_ids.add(id(r))
-                        # a letter appears only in its own line list, so
-                        # the removeAll sweep (DefaultMergenceManager.java:117)
-                        # only ever touches those lines
-                        for r in result:
-                            owner = line_of[id(r)]
-                            owner[:] = [x for x in owner if id(x) not in removing_ids]
+                        # rules only return letters of the list they were
+                        # given, and a letter appears only in its own line
+                        # list, so the removeAll sweep
+                        # (DefaultMergenceManager.java:117) only touches it
+                        line[:] = [x for x in line if id(x) not in removing_ids]
                         pos_map = positions_of(line)
         else:
-            for letter in all_letters:
+            for letter in vertical_targets:
                 lid = id(letter)
                 if lid in removed_global or lid in removing_ids:
                     continue

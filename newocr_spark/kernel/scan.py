@@ -1,8 +1,8 @@
 """Full recognition kernel: bool grid → recognized text lines.
 
-This is the UDF-local core (SURVEY §3.1 steps 3-10) — pure numpy + small
-Python over per-image glyph lists, exactly the granularity at which the
-reference is imperative. Pipeline:
+This is the UDF-local core (SURVEY §3.1 steps 3-10) — numpy over the
+image's component arrays, with Python-level work paid per glyph-cache miss
+and per matched letter, not per pixel or per component object. Pipeline:
 
   line_bounds (G1) → connected_components (G2/G3) → featurize (G5)
   → line assignment, consume-on-match (J2/X1, OCRScan.java:142-166)
@@ -14,7 +14,12 @@ The NN hot loop is one (n_glyphs, N_trained) matrix expression instead of
 the reference's per-character hash-map loop (OCRActions.java:199-210), and
 glyph bitmaps memoize their candidate ranking in a worker-local LRU (a
 font glyph cache: identical bitmaps recur constantly in rendered corpora,
-and the ranking is a pure function of bitmap + broadcast model).
+and the ranking is a pure function of bitmap + broadcast model). The cache
+key is (model id, height, width, run signature): a component's
+bbox-relative runs as bytes, straight from the CCL arrays. Two components
+of one shape have equal runs exactly when their grids are equal, so the
+key is exact, and a hit builds no grid; the grids of an image's misses
+are built together, and each distinct missed key is ranked once.
 
 Deterministic deviation (documented): the reference sorts NN candidates
 with equal scores in hash-map iteration order and runs merge rules over
@@ -27,6 +32,7 @@ the reference wherever the reference itself is well-defined.
 from __future__ import annotations
 
 from collections import OrderedDict
+from itertools import repeat
 
 import numpy as np
 
@@ -119,8 +125,12 @@ class ImageLetter:
         return f"<{self.letter!r}/{self.mod} @({self.x},{self.y}) {self.width}x{self.height}>"
 
 
-# worker-local glyph cache: (model id, glyph shape+bytes) → candidate order.
-# ~220 B/entry; capped LRU so long-running executors stay bounded.
+# worker-local glyph cache: (model id, height, width, run signature) →
+# candidate order. The signature is the glyph's bbox-relative runs as bytes
+# (ccl.Components.signatures), equal exactly when the cropped grids are
+# equal, so a lookup is exact and touches no grid. An entry is the key
+# (about 12 B per run) plus the (N,) int16 order; the LRU cap keeps
+# long-running executors bounded.
 _CAND_CACHE: OrderedDict = OrderedDict()
 _CAND_CACHE_MAX = 200_000
 
@@ -131,47 +141,50 @@ def _rank_candidates(model: FontModel, feats: np.ndarray, ratios: np.ndarray) ->
     score = sum((g - t)^2 over 17 segments)            (OCRUtils.java:90-99)
           + weight(letter) * (trained_ratio - glyph_ratio)^2
                                                        (OCRActions.java:248-258)
-    Ties break by (letter, modifier) for determinism.
+    Ties break by (letter, modifier) for determinism: one lexsort over the
+    whole batch, with the tie keys broadcast to every row.
     """
     T = model.segments
     seg_d = ((feats[:, None, :] - T[None, :, :]) ** 2).sum(axis=-1)
     tr = np.nan_to_num(model.trained_ratios, nan=0.0)
     scores = seg_d + model.ratio_weights[None, :] * (tr[None, :] - ratios[:, None]) ** 2
-    n = len(model.letters)
     letter_codes = np.array([ord(lm[0]) for lm in model.letters])
     mods = np.array([lm[1] for lm in model.letters])
-    orders = np.empty((len(feats), n), dtype=np.int16)
-    for i in range(len(feats)):
-        orders[i] = np.lexsort((mods, letter_codes, scores[i])).astype(np.int16)
-    return orders
+    return _order_rows(scores, letter_codes, mods)
+
+
+def _order_rows(scores: np.ndarray, letter_codes: np.ndarray, mods: np.ndarray) -> np.ndarray:
+    """Per row of ``scores``: column order by (score, letter, modifier)."""
+    keys = (np.broadcast_to(mods, scores.shape), np.broadcast_to(letter_codes, scores.shape), scores)
+    return np.lexsort(keys, axis=-1).astype(np.int16)
 
 
 def _candidates_for(comps, model: FontModel) -> list[np.ndarray]:
-    """Candidate order per component, via the worker-local glyph cache."""
-    keys = []
-    miss_idx = []
-    out: list = [None] * len(comps)
+    """Candidate order per component, via the worker-local glyph cache.
+    The image's misses are featurized and ranked together, each distinct
+    key once."""
     mid = id(model.segments)
-    for i, c in enumerate(comps):
-        key = (mid, c.grid.shape, c.grid.tobytes())
-        keys.append(key)
+    keys = list(zip(
+        repeat(mid), comps.height.tolist(), comps.width.tolist(), comps.signatures()
+    ))
+    out: list = []
+    misses: dict = {}  # key → first component index with it
+    for i, key in enumerate(keys):
         hit = _CAND_CACHE.get(key)
         if hit is not None:
             _CAND_CACHE.move_to_end(key)
-            out[i] = hit
-        else:
-            miss_idx.append(i)
-    if miss_idx:
-        feats = featurize_many([comps[i].grid for i in miss_idx])
-        ratios = np.array(
-            [comps[i].width / comps[i].height for i in miss_idx], dtype=np.float64
-        )
-        orders = _rank_candidates(model, feats, ratios)
-        for j, i in enumerate(miss_idx):
-            out[i] = orders[j]
-            _CAND_CACHE[keys[i]] = orders[j]
+        elif key not in misses:
+            misses[key] = i
+        out.append(hit)
+    if misses:
+        idx = np.fromiter(misses.values(), np.int64, len(misses))
+        feats = featurize_many(comps.grids(idx))
+        orders = _rank_candidates(model, feats, comps.width[idx] / comps.height[idx])
+        ranked = dict(zip(misses, orders))
+        _CAND_CACHE.update(ranked)
         while len(_CAND_CACHE) > _CAND_CACHE_MAX:
             _CAND_CACHE.popitem(last=False)
+        out = [ranked[k] if o is None else o for o, k in zip(out, keys)]
     return out
 
 
@@ -187,39 +200,38 @@ def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageL
 
     # J2 — line assignment: lines sorted by rounded center; each remaining
     # glyph whose vertical center falls in-bounds is consumed in discovery
-    # order (OCRScan.java:142-166)
+    # order (OCRScan.java:142-166). Read off the bbox arrays; letters are
+    # built only for the matched components, already in x order (a stable
+    # sort of discovery order, as the reference's Collections.sort)
     line_entries = sorted(
         ((top, bottom, int(np.floor((bottom - top) / 2.0 + top + 0.5)))
          for top, bottom in bounds),
         key=lambda e: e[2],
     )
-    remaining = list(range(len(comps)))
+    centers = comps.y + comps.height / 2.0
+    free = np.ones(len(comps), dtype=bool)
     sorted_lines: list[tuple[int, list[ImageLetter]]] = []
     for top, bottom, center_y in line_entries:
-        matched: list[ImageLetter] = []
-        still: list[int] = []
-        for ci in remaining:
-            c = comps[ci]
-            center = c.y + c.height / 2.0
-            if not (top <= center <= bottom):
-                still.append(ci)
-                continue
-            order = cands[ci]
-            head = int(order[0])
+        idx = np.flatnonzero(free & (centers >= top) & (centers <= bottom))
+        if not len(idx):
+            continue
+        free[idx] = False
+        idx = idx[np.argsort(comps.x[idx], kind="stable")]
+        orders = [cands[i] for i in idx.tolist()]
+        heads = np.fromiter((o[0] for o in orders), np.int64, len(orders))
+        w, h = comps.width[idx], comps.height[idx]
+        matched = []
+        for order, head, x, y, wi, hi, ratio, aw, ah, mnc, mxc in zip(
+            orders, heads.tolist(), comps.x[idx].tolist(), comps.y[idx].tolist(),
+            w.tolist(), h.tolist(), (w / h).tolist(),
+            model.avg_width[heads].tolist(), model.avg_height[heads].tolist(),
+            model.min_center[heads].tolist(), model.max_center[heads].tolist(),
+        ):
             letter, mod = model.letters[head]
-            il = ImageLetter(
-                letter, mod, c.x, c.y, c.width, c.height,
-                float(model.avg_width[head]), float(model.avg_height[head]),
-                c.width / c.height,
-                float(model.min_center[head]), float(model.max_center[head]),
-            )
-            il.center_offset = center - c.y
+            il = ImageLetter(letter, mod, x, y, wi, hi, aw, ah, ratio, mnc, mxc)
+            il.center_offset = hi / 2.0
             il.attach_candidates(order, model)
             matched.append(il)
-        remaining = still
-        if not matched:
-            continue
-        matched.sort(key=lambda l: l.x)
         sorted_lines.append((center_y, matched))
 
     # M1-M6 — mergence (mutates lines in place, may drop emptied lines)

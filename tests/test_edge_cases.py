@@ -93,6 +93,52 @@ def test_pipeline_isolates_bad_images(spark, model):
     assert rows["d3"].error is not None and rows["d3"].text is None
 
 
+def _png_with_stream(h: int, w: int, rows: int) -> bytes:
+    """A grayscale PNG whose header declares h x w pixels and whose IDAT
+    inflates to ``rows`` white scanlines."""
+    import struct
+    import zlib
+
+    from newocr_spark.codecs.png import _PNG_SIG, _chunk
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    idat = zlib.compress((b"\x00" + b"\xff" * w) * rows, 9)
+    return _PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
+
+
+def test_png_inflation_bounded_by_header(model):
+    """A stream shorter than the header's h * (1 + stride) bytes, or one
+    that would inflate past it (here 1000x), is a ValueError; through the
+    OCR UDF each becomes an error row and the rest of the batch is read."""
+    import pandas as pd
+
+    from newocr_spark.font.render import render_text_png
+    from newocr_spark.pipeline.extract import make_ocr_udf
+
+    truncated = _png_with_stream(20, 30, 19)
+    oversized = _png_with_stream(20, 30, 20_000)
+    assert decode_png(_png_with_stream(20, 30, 20)).shape == (20, 30)
+    with pytest.raises(ValueError, match="too short"):
+        decode_png(truncated)
+    with pytest.raises(ValueError, match="longer than"):
+        decode_png(oversized)
+
+    class _Broadcast:
+        value = model
+
+    batch = pd.DataFrame({
+        "doc_id": ["d1", "d2", "d3"],
+        "offset": [0, 0, 0],
+        "media_ref": ["m-trunc", "m-good", "m-big"],
+        "png": [truncated, render_text_png(["ok 1"], 2), oversized],
+    })
+    (out,) = list(make_ocr_udf(_Broadcast())(iter([batch])))
+    assert out["text"].tolist() == [None, "ok 1", None]
+    assert out["error"][0].startswith("ValueError: PNG data too short")
+    assert out["error"][1] is None
+    assert out["error"][2].startswith("ValueError: PNG data longer than")
+
+
 # ---------------------------------------------------------------------------
 # BMP container + magic-byte decode dispatch (reference parity: multiple
 # image read strategies, train/ImageReadMethod.java:18-67)

@@ -61,9 +61,9 @@ def test_ccl_simple_components():
     ]))
     assert len(comps) == 3
     # discovery order: raster order of first pixel
-    assert (comps[0].x, comps[0].y, comps[0].width, comps[0].height) == (0, 0, 2, 2)
-    assert (comps[1].x, comps[1].y) == (4, 0)
-    assert (comps[2].x, comps[2].y) == (0, 3)
+    assert (comps.x.tolist(), comps.y.tolist()) == ([0, 4, 0], [0, 0, 3])
+    assert (comps.width[0], comps.height[0]) == (2, 2)
+    assert comps.grid(0).all() and comps.grid(1).tolist() == [[True], [True]]
 
 
 def test_ccl_eight_connectivity():
@@ -74,7 +74,10 @@ def test_ccl_eight_connectivity():
         "..#",
     ]))
     assert len(comps) == 1
-    assert comps[0].pixel_count == 3
+    assert comps.pixel_count[0] == 3
+    assert comps.grid(0).tolist() == [
+        [True, False, False], [False, True, False], [False, False, True],
+    ]
 
 
 def test_ccl_u_shape_union():
@@ -85,7 +88,8 @@ def test_ccl_u_shape_union():
         "###",
     ]))
     assert len(comps) == 1
-    assert (comps[0].width, comps[0].height) == (3, 3)
+    assert (comps.width[0], comps.height[0]) == (3, 3)
+    assert comps.pixel_count[0] == 7
 
 
 # ---------------- 17-seg featurization (G5) ----------------
@@ -194,3 +198,46 @@ def test_space_round_boundary():
     assert space_round(0.81) == 1
     assert space_round(1.5) == 1
     assert space_round(2.85) == 3
+
+
+# ---------------- NN ranking + glyph cache (J1) ----------------
+
+def test_order_rows_matches_per_row_lexsort():
+    """The batch's one lexsort gives every row the order the per-glyph
+    lexsort gave, ties included: scores drawn from three values, and
+    letter codes shared between modifiers, force ties at every level."""
+    from newocr_spark.kernel.scan import _order_rows
+
+    rng = np.random.RandomState(3)
+    for g_count, n in ((1, 7), (40, 95), (257, 30)):
+        scores = rng.randint(0, 3, size=(g_count, n)).astype(np.float64) / 7
+        codes = rng.randint(33, 40, size=n)
+        mods = rng.randint(0, 3, size=n)
+        got = _order_rows(scores, codes, mods)
+        assert got.dtype == np.int16 and got.shape == (g_count, n)
+        for i in range(g_count):
+            assert got[i].tolist() == np.lexsort((mods, codes, scores[i])).tolist()
+
+
+def test_glyph_cache_ranks_each_missed_key_once(monkeypatch):
+    """A glyph that misses the cache several times in one image is
+    featurized once; a second scan of the image featurizes nothing."""
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.font.render import render_text_png
+    from newocr_spark.kernel import scan
+
+    batches = []
+    real = scan.featurize_many
+
+    def spy(grids):
+        batches.append(len(grids))
+        return real(grids)
+
+    monkeypatch.setattr(scan, "featurize_many", spy)
+    monkeypatch.setattr(scan, "_CAND_CACHE", type(scan._CAND_CACHE)())
+    m = get_model()
+    png = render_text_png(["abab baa"], 2)
+    assert scan.scan_image_bytes(png, m) == "abab baa"
+    assert batches == [2]
+    assert scan.scan_image_bytes(png, m) == "abab baa"
+    assert batches == [2]

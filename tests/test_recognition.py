@@ -35,6 +35,32 @@ def test_merge_rules_end_to_end(font_model):
         assert got == text, f"scale {scale}"
 
 
+def test_vertical_relations_only_piece_neighbourhoods(font_model, monkeypatch):
+    """Only letters whose x-overlap holds a dot or horizontal-line letter
+    get a vertical relation; the others (plain letters, the '%' pieces) get
+    no entry, and the merged text is the golden text."""
+    from newocr_spark.kernel import mergence, scan
+
+    seen = {}
+    real = scan.run_mergence
+
+    def spy(sorted_lines, model):
+        ctx = mergence._Ctx(model)
+        letters = [l for _y, line in sorted_lines for l in line]
+        seen["letters"] = [(l.letter, l.mod) for l in letters]
+        rel = mergence.vertical_relations(ctx, letters)
+        seen["related"] = [(l.letter, l.mod) for l in letters if id(l) in rel]
+        return real(sorted_lines, model)
+
+    monkeypatch.setattr(scan, "run_mergence", spy)
+    text = "ab i j ! ? % : ; = xyz"
+    assert scan_image_bytes(render_text_png([text], 2), font_model) == text
+    plain = [lm for lm in seen["letters"] if lm[0] in "abxyz"]
+    assert len(plain) == 5 and not any(lm in seen["related"] for lm in plain)
+    # the two pieces of each of i j ! ? : ; = and nothing else
+    assert len(seen["related"]) == 14
+
+
 def test_apostrophe_vs_quote(font_model):
     # two adjacent apostrophe-height bars merge to '"', a lone one stays "'"
     text = "a'b \"c"
