@@ -13,6 +13,8 @@ import struct
 
 import numpy as np
 
+from .limits import check_pixels
+
 _FILE_HDR = "<2sIHHI"  # magic, file size, res1, res2, pixel offset
 _INFO_HDR = "<IiiHHIIiiII"  # BITMAPINFOHEADER
 
@@ -64,6 +66,7 @@ def decode_bmp(buf: bytes) -> np.ndarray:
         raise ValueError(f"unsupported BMP compression {compression}")
     flip = h > 0
     h = abs(h)
+    check_pixels(w, h)
     if bpp == 8:
         stride = (w + 3) & ~3
         raw = np.frombuffer(buf, np.uint8, stride * h, pix_off).reshape(h, stride)

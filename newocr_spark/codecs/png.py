@@ -19,6 +19,8 @@ import zlib
 
 import numpy as np
 
+from .limits import check_pixels
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
@@ -120,6 +122,7 @@ def decode_png(buf: bytes) -> np.ndarray:
             break
     if w is None:
         raise ValueError("missing IHDR")
+    check_pixels(w, h)
     channels = 1 if color_type == 0 else 3
     stride = w * channels
     # inflate at most the h * (1 + stride) bytes the header declares, so a

@@ -205,12 +205,12 @@ _MIN_SEP = 0.05
 
 def _class_stats(canvas: np.ndarray):
     """Per-scale feature vectors + mean + bbox ratio for one glyph piece."""
-    from ..kernel.features import featurize
+    from ..kernel.features import featurize_many
 
     ys, xs = np.nonzero(canvas)
     piece = canvas[ys.min() : ys.max() + 1, xs.min() : xs.max() + 1]
-    vecs = np.stack(
-        [featurize(np.kron(piece, np.ones((k, k), dtype=bool))) for k in _SCALES]
+    vecs = featurize_many(
+        [np.kron(piece, np.ones((k, k), dtype=bool)) for k in _SCALES]
     )
     ratio = piece.shape[1] / piece.shape[0]
     return vecs, vecs.mean(axis=0), ratio

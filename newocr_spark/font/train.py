@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..kernel.ccl import connected_components
-from ..kernel.features import featurize
+from ..kernel.features import featurize_many
 from ..kernel.grid import binarize, rows_populated
 from ..kernel.lines import line_bounds
 from ..letters import LETTERS
@@ -64,12 +64,13 @@ def _letters_during_training(grid: np.ndarray, config: FontConfig) -> list[tuple
     out = []
     for from_y, to_y in bounds:
         comps = connected_components(grid[from_y:to_y, :])
+        feats = featurize_many(comps.grids(range(len(comps))))
         found = [
             # SearchCharacter(coords, 0, fromY) offset
-            _Piece(x, y + from_y, w, h, featurize(g))
-            for x, y, w, h, g in zip(
+            _Piece(x, y + from_y, w, h, f)
+            for x, y, w, h, f in zip(
                 comps.x.tolist(), comps.y.tolist(), comps.width.tolist(),
-                comps.height.tolist(), comps.grids(range(len(comps))),
+                comps.height.tolist(), feats,
             )
         ]
         found.sort(key=lambda c: c.x)  # Collections.sort — stable

@@ -15,11 +15,14 @@ the reference's per-character hash-map loop (OCRActions.java:199-210), and
 glyph bitmaps memoize their candidate ranking in a worker-local LRU (a
 font glyph cache: identical bitmaps recur constantly in rendered corpora,
 and the ranking is a pure function of bitmap + broadcast model). The cache
-key is (model id, height, width, run signature): a component's
+key is (model digest, height, width, run signature): a content hash of
+everything the ranking reads from the model, and a component's
 bbox-relative runs as bytes, straight from the CCL arrays. Two components
 of one shape have equal runs exactly when their grids are equal, so the
-key is exact, and a hit builds no grid; the grids of an image's misses
-are built together, and each distinct missed key is ranked once.
+key is exact, and a hit builds no grid. The grids of an image's misses
+are built together, each distinct missed key is ranked once, and the
+featurizer does its numpy work per shape group of misses, not per glyph
+(kernel/features.py).
 
 Deterministic deviation (documented): the reference sorts NN candidates
 with equal scores in hash-map iteration order and runs merge rules over
@@ -125,12 +128,15 @@ class ImageLetter:
         return f"<{self.letter!r}/{self.mod} @({self.x},{self.y}) {self.width}x{self.height}>"
 
 
-# worker-local glyph cache: (model id, height, width, run signature) →
-# candidate order. The signature is the glyph's bbox-relative runs as bytes
-# (ccl.Components.signatures), equal exactly when the cropped grids are
-# equal, so a lookup is exact and touches no grid. An entry is the key
-# (about 12 B per run) plus the (N,) int16 order; the LRU cap keeps
-# long-running executors bounded.
+# worker-local glyph cache: (model digest, height, width, run signature) →
+# candidate order. The digest (FontModel.digest) is a hash of everything
+# the ranking reads, so equal digests rank alike: a re-broadcast or
+# unpickled copy of a model hits the entries the original filled, and a
+# model with another config never reuses them. The signature is the
+# glyph's bbox-relative runs as bytes (ccl.Components.signatures), equal
+# exactly when the cropped grids are equal, so a lookup is exact and
+# touches no grid. An entry is the key (about 12 B per run) plus the (N,)
+# int16 order; the LRU cap keeps long-running executors bounded.
 _CAND_CACHE: OrderedDict = OrderedDict()
 _CAND_CACHE_MAX = 200_000
 
@@ -148,9 +154,7 @@ def _rank_candidates(model: FontModel, feats: np.ndarray, ratios: np.ndarray) ->
     seg_d = ((feats[:, None, :] - T[None, :, :]) ** 2).sum(axis=-1)
     tr = np.nan_to_num(model.trained_ratios, nan=0.0)
     scores = seg_d + model.ratio_weights[None, :] * (tr[None, :] - ratios[:, None]) ** 2
-    letter_codes = np.array([ord(lm[0]) for lm in model.letters])
-    mods = np.array([lm[1] for lm in model.letters])
-    return _order_rows(scores, letter_codes, mods)
+    return _order_rows(scores, model.letter_codes, model.modifiers)
 
 
 def _order_rows(scores: np.ndarray, letter_codes: np.ndarray, mods: np.ndarray) -> np.ndarray:
@@ -163,9 +167,9 @@ def _candidates_for(comps, model: FontModel) -> list[np.ndarray]:
     """Candidate order per component, via the worker-local glyph cache.
     The image's misses are featurized and ranked together, each distinct
     key once."""
-    mid = id(model.segments)
     keys = list(zip(
-        repeat(mid), comps.height.tolist(), comps.width.tolist(), comps.signatures()
+        repeat(model.digest), comps.height.tolist(), comps.width.tolist(),
+        comps.signatures(),
     ))
     out: list = []
     misses: dict = {}  # key → first component index with it

@@ -11,6 +11,7 @@ This replaces the reference's per-lookup async DB reads
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -158,6 +159,20 @@ class FontModel:
                 self.avg_height != 0, self.avg_width / self.avg_height, np.nan
             )
         self.trained_ratios = ratios
+        # NN tie-break keys (kernel/scan._rank_candidates), built once
+        self.letter_codes = np.array([ord(lm[0]) for lm in self.letters])
+        self.modifiers = np.array([lm[1] for lm in self.letters])
+        # content identity of everything the NN ranking reads: the glyph
+        # cache keys on it, so a model with another config (or weights)
+        # never reuses this one's rankings, and an unpickled copy on an
+        # executor hits the entries the original filled
+        h = hashlib.blake2b(digest_size=16)
+        for a in (self.letter_codes, self.modifiers, self.segments,
+                  self.trained_ratios, self.ratio_weights):
+            a = np.ascontiguousarray(a, dtype=np.float64)
+            h.update(repr(a.shape).encode())
+            h.update(a.tobytes())
+        self.digest = h.digest()
 
     def row(self, letter: str, mod: int) -> int:
         return self._index[(letter, mod)]

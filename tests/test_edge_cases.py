@@ -139,6 +139,100 @@ def test_png_inflation_bounded_by_header(model):
     assert out["error"][2].startswith("ValueError: PNG data longer than")
 
 
+def _declare_dims(buf: bytes, w: int, h: int) -> bytes:
+    """``buf`` (PNG or BMP) with its header's width and height replaced;
+    a PNG keeps a valid IHDR CRC, so only the size is wrong."""
+    import struct
+    import zlib
+
+    b = bytearray(buf)
+    if b[:2] == b"BM":
+        struct.pack_into("<ii", b, 18, w, h)
+    else:
+        struct.pack_into(">II", b, 16, w, h)
+        struct.pack_into(">I", b, 29, zlib.crc32(bytes(b[12:29])) & 0xFFFFFFFF)
+    return bytes(b)
+
+
+def test_declared_pixels_over_budget_is_image_too_large(model):
+    """A header declaring 100000 x 100000 pixels is rejected before any
+    inflation or allocation: ``ImageTooLarge`` (a ``ValueError``), an error
+    row through the OCR UDF, and the good image in the batch still scans."""
+    import pandas as pd
+
+    from newocr_spark.codecs import MAX_PIXELS, ImageTooLarge
+    from newocr_spark.codecs.bmp import decode_image, encode_bmp
+    from newocr_spark.font.render import render_text_image, render_text_png
+    from newocr_spark.pipeline.extract import make_ocr_udf
+
+    assert 4961 * 7016 <= MAX_PIXELS  # a 600 dpi A4 page fits
+    img = render_text_image(["ok 1"], 2)
+    huge_png = _declare_dims(encode_png(img), 100_000, 100_000)
+    huge_bmp = _declare_dims(encode_bmp(img), 100_000, -100_000)
+    for buf in (huge_png, huge_bmp):
+        with pytest.raises(ImageTooLarge, match="exceeds"):
+            decode_image(buf)
+    assert issubclass(ImageTooLarge, ValueError)
+
+    class _Broadcast:
+        value = model
+
+    batch = pd.DataFrame({
+        "doc_id": ["d1", "d2", "d3"],
+        "offset": [0, 0, 0],
+        "media_ref": ["m-png", "m-good", "m-bmp"],
+        "png": [huge_png, render_text_png(["ok 1"], 2), huge_bmp],
+    })
+    (out,) = list(make_ocr_udf(_Broadcast())(iter([batch])))
+    assert out["text"].tolist() == [None, "ok 1", None]
+    assert out["error"][0].startswith("ImageTooLarge: 100000x100000")
+    assert out["error"][1] is None
+    assert out["error"][2].startswith("ImageTooLarge: 100000x100000")
+
+
+def test_hostile_media_fuzz_through_map_in_pandas(spark, model):
+    """Mutated PNG and BMP bytes (truncated, byte-flipped, huge declared
+    dimensions) through the real ``mapInPandas`` OCR plan: every output row
+    is a text row or an error row, the unmutated images read exactly, and
+    no task fails (the collect returns)."""
+    from newocr_spark.codecs.bmp import encode_bmp
+    from newocr_spark.font.render import render_text_image
+    from newocr_spark.pipeline.extract import OCR_OUTPUT_SCHEMA, make_ocr_udf
+
+    img = render_text_image(["fuzz 42"], 2)
+    rng = np.random.RandomState(2024)
+    rows = []
+    for kind, good in (("png", encode_png(img)), ("bmp", encode_bmp(img))):
+        variants = [("good", good)]
+        for cut in sorted(rng.randint(1, len(good), size=6)) + [8, 30, 60]:
+            variants.append((f"trunc{cut}", good[:cut]))
+        for i in range(16):
+            b = bytearray(good)
+            # bias flips into the headers, where the decoders branch
+            pos = rng.randint(0, 70) if i % 2 else rng.randint(0, len(b))
+            b[pos] ^= 1 << rng.randint(0, 8)
+            variants.append((f"flip{i}", bytes(b)))
+        for w, h in ((100_000, 100_000), (2**31 - 1, 1), (7000, 7000), (60, 2**16)):
+            variants.append((f"dims{w}x{h}", _declare_dims(good, w, h)))
+        rows += [(f"{kind}-{name}", 0, f"m-{kind}-{name}", bytearray(b)) for name, b in variants]
+
+    media = spark.createDataFrame(
+        rows, "doc_id string, offset int, media_ref string, png binary"
+    ).repartition(3)
+    bmodel = spark.sparkContext.broadcast(model)
+    out = media.mapInPandas(make_ocr_udf(bmodel), OCR_OUTPUT_SCHEMA).collect()
+
+    assert sorted(r.doc_id for r in out) == sorted(r[0] for r in rows)
+    for r in out:
+        assert (r.text is None) != (r.error is None), r
+    by_id = {r.doc_id: r for r in out}
+    assert by_id["png-good"].text == "fuzz 42" and by_id["bmp-good"].text == "fuzz 42"
+    for kind in ("png", "bmp"):
+        assert by_id[f"{kind}-dims100000x100000"].error.startswith("ImageTooLarge: ")
+        assert by_id[f"{kind}-dims7000x7000"].error.startswith("ImageTooLarge: ")
+        assert by_id[f"{kind}-trunc8"].error is not None
+
+
 # ---------------------------------------------------------------------------
 # BMP container + magic-byte decode dispatch (reference parity: multiple
 # image read strategies, train/ImageReadMethod.java:18-67)

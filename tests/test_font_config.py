@@ -114,3 +114,21 @@ def test_ratio_weight_override_applies(model):
     assert patched.ratio_weights[i] == base * 3.0
     j = patched.row("A", 0)
     assert patched.ratio_weights[j] == base
+
+
+def test_glyph_cache_keys_on_model_content(model, monkeypatch):
+    """A model with another config must not reuse the base model's cached
+    rankings, even though ``dataclasses.replace`` shares its arrays: with
+    ``size_ratio_weight=0`` a scan after the base model warmed the cache
+    reads what it reads from a cold cache."""
+    from collections import OrderedDict
+
+    from newocr_spark.kernel import scan
+
+    cfg = dataclasses.replace(model.config, size_ratio_weight=0.0)
+    monkeypatch.setattr(scan, "_CAND_CACHE", OrderedDict())
+    cold = _scan_with_config(model, cfg)
+    monkeypatch.setattr(scan, "_CAND_CACHE", OrderedDict())
+    assert _scan_with_config(model, model.config) == "i like jam; really!"
+    warm = _scan_with_config(model, cfg)
+    assert warm == cold

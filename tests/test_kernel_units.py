@@ -241,3 +241,46 @@ def test_glyph_cache_ranks_each_missed_key_once(monkeypatch):
     assert batches == [2]
     assert scan.scan_image_bytes(png, m) == "abab baa"
     assert batches == [2]
+
+
+def test_glyph_cache_hits_across_pickled_model(monkeypatch):
+    """A model's cache entries key on its content digest, not its object
+    identity: an unpickled copy (what every executor gets from a
+    broadcast) hits the entries the original filled and featurizes
+    nothing."""
+    import pickle
+
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.font.render import render_text_png
+    from newocr_spark.kernel import scan
+
+    batches = []
+    real = scan.featurize_many
+
+    def spy(grids):
+        batches.append(len(grids))
+        return real(grids)
+
+    monkeypatch.setattr(scan, "featurize_many", spy)
+    monkeypatch.setattr(scan, "_CAND_CACHE", type(scan._CAND_CACHE)())
+    m = get_model()
+    png = render_text_png(["abab baa"], 2)
+    assert scan.scan_image_bytes(png, m) == "abab baa"
+    assert batches == [2]
+    copy = pickle.loads(pickle.dumps(m))
+    assert copy is not m and copy.segments is not m.segments
+    assert copy.digest == m.digest
+    assert np.array_equal(copy.letter_codes, m.letter_codes)
+    assert np.array_equal(copy.modifiers, m.modifiers)
+    assert scan.scan_image_bytes(png, copy) == "abab baa"
+    assert batches == [2]
+
+
+def test_model_digest_differs_across_faces():
+    """Two faces never share a glyph-cache key: their digests differ."""
+    from newocr_spark import artifacts
+    from newocr_spark.artifacts import get_model
+
+    digests = {name: get_model(name).digest for name in artifacts._DIRS}
+    assert len(digests) == 6
+    assert len(set(digests.values())) == len(digests)
