@@ -164,9 +164,11 @@ def _verify_pairs(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFram
     return _jaccard_finalize(inter, sizes, threshold)
 
 
-# bitmap strategy bound: vocab words above this would make the per-doc
-# bitmaps (vocab/8 bytes each) too fat to broadcast for guard-limit corpora
+# bitmap strategy bounds on its two driver collects: the vocab, and the
+# docs x ceil(vocab/8) bytes of packed per-doc bitmaps it broadcasts (the
+# 50k-row guard limit at the full vocab is 100 MB, under the byte budget)
 MAX_BITMAP_VOCAB = 16_384
+MAX_BITMAP_BYTES = 128 << 20
 
 # byte -> popcount lookup (numpy 1.x has no bitwise_count)
 _POP8 = None
@@ -222,11 +224,12 @@ def ngram_jaccard_pairs(
     5x.)"""
     guard_quadratic(docs, max_rows, "ngram_jaccard_pairs", "minhash_lsh_pairs")
     sh_plain = _shingles(docs, n).cache()  # probe + vocab + per-doc reuse
-    if strategy == "auto":
-        probe = sh_plain.select("shingle").distinct().limit(MAX_BITMAP_VOCAB + 1)
-        strategy = "bitmap" if probe.count() <= MAX_BITMAP_VOCAB else "join"
+    if strategy in ("auto", "bitmap"):
+        n_vocab = sh_plain.select("shingle").distinct().limit(MAX_BITMAP_VOCAB + 1).count()
+        if strategy == "auto":
+            strategy = "bitmap" if n_vocab <= MAX_BITMAP_VOCAB else "join"
     if strategy == "bitmap":
-        return _ngram_jaccard_bitmap(docs.sparkSession, sh_plain, threshold)
+        return _ngram_jaccard_bitmap(docs.sparkSession, sh_plain, threshold, n_vocab)
     if strategy != "join":
         raise ValueError(
             f"unknown strategy {strategy!r}: pass 'auto', 'bitmap' or "
@@ -250,18 +253,27 @@ def ngram_jaccard_pairs(
     return _jaccard_finalize(inter, sizes, threshold)
 
 
-def _ngram_jaccard_bitmap(spark, sh: DataFrame, threshold: float) -> DataFrame:
+def _ngram_jaccard_bitmap(spark, sh: DataFrame, threshold: float, n_vocab: int) -> DataFrame:
     """Dense-vocab strategy for ngram_jaccard_pairs: global shingle->bit
     mapping, per-doc bitsets, broadcast matrix, vectorized AND+popcount.
-    Exact — same output as the equi-join strategy (asserted in
-    tests/test_edge_cases.py)."""
+    Exact — same output as the equi-join strategy (tests/test_ann_recall.py).
+    Bounded probes (``n_vocab``, then docs) check both collects first."""
     import numpy as np
     import pandas as pd
 
+    n_bytes = (n_vocab + 7) // 8
+    max_docs = MAX_BITMAP_BYTES // max(n_bytes, 1)
+    if n_vocab > MAX_BITMAP_VOCAB or (
+        sh.select("doc_id").distinct().limit(max_docs + 1).count() > max_docs
+    ):
+        sh.unpersist()
+        raise ValueError(
+            f"bitmap strategy: over {MAX_BITMAP_VOCAB} distinct shingles or "
+            f"{MAX_BITMAP_BYTES} bytes of docs x vocab/8 bitsets; use strategy='join'"
+        )
     vocab = [
         r[0] for r in sh.select("shingle").distinct().orderBy("shingle").collect()
     ]
-    n_bytes = (len(vocab) + 7) // 8
     sid_b = spark.sparkContext.broadcast({s: i for i, s in enumerate(vocab)})
 
     def pack(batches):

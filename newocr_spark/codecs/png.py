@@ -95,7 +95,8 @@ def _unfilter(data: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
 
 
 def decode_png(buf: bytes) -> np.ndarray:
-    """Decode PNG bytes → (h, w) uint8 grayscale or (h, w, 3) uint8 RGB."""
+    """Decode PNG bytes → (h, w) uint8 grayscale or (h, w, 3) uint8 RGB.
+    Every chunk CRC is checked; a bad or missing CRC, or no IEND, is a ValueError."""
     if bytes(buf[:8]) != _PNG_SIG:
         raise ValueError("not a PNG")
     pos = 8
@@ -105,9 +106,12 @@ def decode_png(buf: bytes) -> np.ndarray:
     n = len(buf)
     while pos + 8 <= n:
         (length,) = struct.unpack_from(">I", buf, pos)
-        tag = bytes(buf[pos + 4 : pos + 8])
-        payload = bytes(buf[pos + 8 : pos + 8 + length])
-        pos += 12 + length
+        end = pos + 8 + length
+        chunk, crc = bytes(buf[pos + 4 : end]), bytes(buf[end : end + 4])
+        pos = end + 4
+        if len(crc) < 4 or zlib.crc32(chunk) != int.from_bytes(crc, "big"):
+            raise ValueError(f"PNG chunk {chunk[:4]!r}: CRC missing or wrong")
+        tag, payload = chunk[:4], chunk[4:]
         if tag == b"IHDR":
             w, h, bit_depth, color_type, comp, filt, interlace = struct.unpack(
                 ">IIBBBBB", payload
@@ -120,6 +124,8 @@ def decode_png(buf: bytes) -> np.ndarray:
             idat.extend(payload)
         elif tag == b"IEND":
             break
+    else:
+        raise ValueError("PNG cut short: no IEND chunk")
     if w is None:
         raise ValueError("missing IHDR")
     check_pixels(w, h)

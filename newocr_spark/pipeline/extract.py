@@ -1,12 +1,12 @@
 """The flagship extraction job (SURVEY §3.1, Spark-native re-expression).
 
-    documents ──explode──▶ spans ──┬─ kind='text' ─────────────────────────┐
-                          (_split) └─ kind='media' (doc_id, offset,         │
+    documents ─posexplode─▶ spans ─┬─ kind='text' ──────────────────────────┐
+     (_split: seq numbered here)   └─ kind='media' (doc_id, seq, offset,    │
                                       media_ref) ──broadcast──┐             │
     media (media_ref, png) ─────────────────────────────── join             │
-                  └ mapInPandas(OCR kernel) (_ocr) ─────────────────────────┤
+        └ mapInPandas(OCR kernel, keys pass through) (_ocr) ────────────────┤
                                                                             ▼
-      text ∪ OCR ∪ missing-media error rows ─ row_number per doc (_assemble)
+      text ∪ OCR ∪ missing-media error rows, a plain union (_assemble)
           ─▶ extracted spans (groupBy(doc_id) + sort_array(collect_list(...))
              for the assembled-document variant)
 
@@ -19,8 +19,8 @@ Physical design (SURVEY §4, "needs explicit engineering"):
   * the font model ships as ONE sc.broadcast of numpy arrays — the NN loop
     is numpy inside the Arrow UDF, zero per-lookup IO (vs the reference's
     per-character DB futures, OCRScan.java:209, OCRDatabaseManager.java:234-302);
-  * the media-span metadata (doc_id, offset, media_ref) broadcasts onto the
-    media table, so image bytes never shuffle: OCR runs on the media
+  * the media-span metadata (doc_id, seq, offset, media_ref) broadcasts onto
+    the media table, so image bytes never shuffle: OCR runs on the media
     table's own size-balanced partitioning (parquet splits are bounded by
     maxPartitionBytes). ``extract_spans`` broadcasts the whole slice's
     metadata; ``ExtractRunner`` broadcasts only its current bucket group's
@@ -31,9 +31,9 @@ Physical design (SURVEY §4, "needs explicit engineering"):
     pushes the kind filter and column pruning into the parquet scan.
 
 At 100 TB: the documents scan is columnar with only (doc_id, spans) read;
-image bytes never shuffle; the wide shuffles carry only span metadata
-(the missing-media anti-join) and output rows (the per-doc assembly,
-keyed on the high-cardinality doc_id) — no skewed groupBy keys.
+image bytes never shuffle; ``seq`` is numbered inside each documents row, so
+no stage groups by doc_id and the only wide op is the metadata-only
+missing-media anti-join — no skewed keys, no per-doc window.
 """
 
 from __future__ import annotations
@@ -41,22 +41,23 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import FontModel
 
 OCR_OUTPUT_SCHEMA = (
-    "doc_id string, offset int, kind string, text string, media_ref string, "
+    "doc_id string, seq int, offset int, kind string, text string, media_ref string, "
     "glyph_count long, line_count int, font_size_pt double, error string"
 )
 
 
 def make_ocr_udf(broadcast_model):
-    """mapInPandas generator: (doc_id, offset, media_ref, png) batches →
-    recognized spans + per-image metrics. Decode → binarize → kernel scan,
-    all numpy inside the Arrow batch (north rule: no per-row Python at the
-    DataFrame level — the per-image loop is the reference's own granularity)."""
+    """mapInPandas generator: (key columns..., png) batches → the keys, passed
+    through unnamed, + recognized spans + per-image metrics. Decode → binarize
+    → kernel scan, all numpy inside the Arrow batch (north rule: no per-row
+    Python at the DataFrame level — the per-image loop is the reference's own
+    granularity)."""
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..codecs.bmp import decode_image
@@ -88,40 +89,34 @@ def make_ocr_udf(broadcast_model):
                     font_sizes[i] = sum(sizes) / len(sizes) if sizes else None
                 except Exception as exc:  # per-image fault isolation
                     errors[i] = f"{type(exc).__name__}: {exc}"
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "offset": pdf["offset"].values,
-                    "kind": ["text"] * n,
-                    "text": texts,
-                    "media_ref": pdf["media_ref"].values,
-                    "glyph_count": glyphs,
-                    "line_count": line_counts,
-                    "font_size_pt": font_sizes,
-                    "error": errors,
-                }
+            yield pdf.drop(columns="png").assign(
+                kind="text", text=texts, glyph_count=glyphs, line_count=line_counts,
+                font_size_pt=font_sizes, error=errors,
             )
 
     return ocr_batches
 
 
 def _split(documents: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """documents → (text-span rows in the output shape, media-span metadata
-    (doc_id, offset, media_ref))."""
+    """documents → (text spans (doc_id, seq, offset, kind, text), media-span
+    metadata (doc_id, seq, offset, media_ref)).
+
+    ``seq`` is numbered once, here: ``posexplode`` over each row's text and
+    media spans sorted by (offset, kind, text, media_ref); later stages carry
+    it, so the output needs no per-doc window. Tied offsets number in that
+    order; ``seq`` depends only on the documents table (a media_ref twice in
+    the media table gives two OCR rows with one ``seq``); two documents rows
+    with one doc_id each number from 0; other kinds and null spans are
+    dropped unnumbered."""
     spans = documents.select(
-        "doc_id", F.explode("spans").alias("span")
-    ).select("doc_id", "span.kind", "span.text", "span.media_ref", "span.offset")
-    text_spans = spans.filter(F.col("kind") == "text").select(
-        "doc_id", "offset", F.lit("text").alias("kind"), "text",
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(0).cast("long").alias("glyph_count"),
-        F.lit(0).cast("int").alias("line_count"),
-        F.lit(None).cast("double").alias("font_size_pt"),
-        F.lit(None).cast("string").alias("error"),
-    )
-    meta = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref"
-    )
+        "doc_id",
+        F.posexplode(F.expr(
+            "sort_array(transform(filter(spans, s -> s.kind IN ('text', 'media')),"
+            " s -> struct(s.offset, s.kind, s.text, s.media_ref)))"
+        )).alias("seq", "span"),
+    ).select("doc_id", "seq", "span.*")
+    text_spans = spans.filter(F.col("kind") == "text").drop("media_ref")
+    meta = spans.filter(F.col("kind") == "media").drop("kind", "text")
     return text_spans, meta
 
 
@@ -132,7 +127,7 @@ def _ocr(media: DataFrame, meta: DataFrame, bmodel) -> DataFrame:
     return (
         media.select("media_ref", "png")
         .join(F.broadcast(meta), "media_ref", "inner")
-        .select("doc_id", "offset", "media_ref", "png")
+        .select("doc_id", "seq", "offset", "media_ref", "png")
         .mapInPandas(make_ocr_udf(bmodel), OCR_OUTPUT_SCHEMA)
     )
 
@@ -140,21 +135,16 @@ def _ocr(media: DataFrame, meta: DataFrame, bmodel) -> DataFrame:
 def _assemble(
     text_spans: DataFrame, ocr_spans: DataFrame, meta: DataFrame, media: DataFrame
 ) -> DataFrame:
-    """text rows ∪ OCR rows ∪ missing-media error rows, numbered per doc.
-    Missing media is found by a metadata-only anti-join: no bytes move."""
+    """text rows ∪ OCR rows ∪ missing-media error rows, each carrying the
+    ``seq`` ``_split`` gave it; a column a row lacks is null, and its counts
+    are 0. Missing media is found by a metadata-only anti-join: no bytes move."""
     missing = meta.join(media.select("media_ref"), "media_ref", "left_anti").select(
-        "doc_id", "offset", F.lit("text").alias("kind"),
-        F.lit(None).cast("string").alias("text"), "media_ref",
-        F.lit(0).cast("long").alias("glyph_count"),
-        F.lit(0).cast("int").alias("line_count"),
-        F.lit(None).cast("double").alias("font_size_pt"),
-        F.lit("ValueError: missing media bytes").alias("error"),
+        "*", F.lit("text").alias("kind"), F.lit("ValueError: missing media bytes").alias("error")
     )
-    result = text_spans.unionByName(ocr_spans).unionByName(missing)
-    seq = Window.partitionBy("doc_id").orderBy("offset")
-    return result.withColumn("seq", (F.row_number().over(seq) - 1).cast("int")).select(
+    return text_spans.unionByName(ocr_spans, True).unionByName(missing, True).select(
         "doc_id", "seq", "kind", "text", "media_ref", "offset",
-        "glyph_count", "line_count", "font_size_pt", "error",
+        F.coalesce("glyph_count", F.lit(0)).alias("glyph_count"),
+        F.coalesce("line_count", F.lit(0)).alias("line_count"), "font_size_pt", "error",
     )
 
 

@@ -29,9 +29,9 @@ keyed on the media table itself:
   * resume = read the state table, skip buckets already committed for the
     same input snapshot; everything else is recomputed;
   * once all buckets are committed, the CHEAP assembly stage — the same
-    ``_assemble`` as ``extract_spans``: text spans pass through, missing
-    media become error rows, per-doc seq numbering — runs once over the
-    intermediate — idempotent full overwrite.
+    ``_assemble`` as ``extract_spans``: a union of the text spans, the
+    intermediate and missing-media error rows, each carrying the ``seq``
+    numbered at split time — runs once, an idempotent full overwrite.
 
 All writes and the state log go through the SpanSink / StateStore seam
 (pipeline/sinks.py): the shipped implementation is Parquet (this sandbox
@@ -45,6 +45,8 @@ guarantee.
 
 from __future__ import annotations
 
+import datetime
+import hashlib
 import time
 from dataclasses import dataclass
 
@@ -84,14 +86,15 @@ class ExtractRunner:
         return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
 
     def snapshot_key(self, input_snapshot: str) -> str:
-        """Effective checkpoint key: folds n_buckets into the snapshot id.
-        Dynamic partition overwrite only replaces bucket partitions PRESENT
-        in the current run's output, so a rerun against a changed input (or
-        different bucketing) could otherwise leave stale rows from a prior
-        snapshot in untouched partitions. Every intermediate row is tagged
-        with this key and both the metrics read and the assembly filter on
-        it — stale rows can never leak into the output."""
-        return f"{input_snapshot}#b{self.n_buckets}"
+        """Effective checkpoint key: the snapshot id, n_buckets and a digest
+        of ``OCR_OUTPUT_SCHEMA``. Dynamic partition overwrite only replaces
+        bucket partitions PRESENT in the current run's output, so a rerun
+        against a changed input, bucketing or intermediate schema could
+        otherwise resume from stale (or null-column) rows. Every intermediate
+        row is tagged with this key and both the metrics read and the
+        assembly filter on it — stale rows never reach the output."""
+        schema = hashlib.blake2b(extract.OCR_OUTPUT_SCHEMA.encode(), digest_size=4)
+        return f"{input_snapshot}#b{self.n_buckets}#s{schema.hexdigest()}"
 
     def _read_intermediate(self) -> DataFrame:
         return self.ocr_sink.read(
@@ -111,7 +114,6 @@ class ExtractRunner:
         text_spans, meta = extract._split(documents)
         bmodel = self.spark.sparkContext.broadcast(self.model)
 
-        committed = 0
         stats = {"groups_run": 0, "buckets_done": len(done)}
         for group in groups:
             t0 = time.time()
@@ -147,34 +149,23 @@ class ExtractRunner:
                 )
                 .collect()
             )
-            by_bucket = {r.bucket: r for r in metrics}
-            import datetime
-
+            by_bucket = {r.bucket: r.asDict() for r in metrics}
             now = datetime.datetime.now(datetime.timezone.utc)
-            self.state.append(
-                [
-                    {
-                        "run_id": run_id,
-                        "partition_id": int(b),
-                        "doc_id_min": by_bucket[b].doc_id_min if b in by_bucket else None,
-                        "doc_id_max": by_bucket[b].doc_id_max if b in by_bucket else None,
-                        "input_snapshot": snap,
-                        "docs_done": int(by_bucket[b].docs_done) if b in by_bucket else 0,
-                        "glyph_count": int(by_bucket[b].glyph_count) if b in by_bucket else 0,
-                        "error_count": int(by_bucket[b].error_count) if b in by_bucket else 0,
-                        "wall_ms": wall_ms,
-                        "attempt": attempt,
-                        "committed_at": now,
-                    }
-                    for b in group
-                ]
-            )
-            committed += 1
+            self.state.append([
+                {
+                    "run_id": run_id, "partition_id": int(b), "input_snapshot": snap,
+                    "doc_id_min": None, "doc_id_max": None,
+                    "docs_done": 0, "glyph_count": 0, "error_count": 0,
+                    **by_bucket.get(b, {}),
+                    "wall_ms": wall_ms, "attempt": attempt, "committed_at": now,
+                }
+                for b in group
+            ])
             stats["groups_run"] += 1
             stats["buckets_done"] += len(group)
-            if self.fail_after_groups is not None and committed >= self.fail_after_groups:
+            if self.fail_after_groups is not None and stats["groups_run"] >= self.fail_after_groups:
                 raise RuntimeError(
-                    f"injected failure after {committed} group(s) (test hook)"
+                    f"injected failure after {stats['groups_run']} group(s) (test hook)"
                 )
 
         # ---- assembly stage (cheap, idempotent): runs once all buckets are
@@ -191,8 +182,9 @@ class ExtractRunner:
             # FULL overwrite: the assembly is the one stage allowed to
             # rewrite everything — a dynamic/partition overwrite of a
             # shrunken snapshot would leave prior-run output partitions in
-            # buckets this run doesn't touch
-            self.out_sink.overwrite_all(final, "bucket")
+            # buckets this run doesn't touch. The runner's one exchange
+            # gathers each bucket, so no union partition writes a file per bucket
+            self.out_sink.overwrite_all(final.repartition("bucket"), "bucket")
         return stats
 
     def read_output(self) -> DataFrame:

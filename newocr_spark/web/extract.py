@@ -11,9 +11,9 @@ Dataflow (north_rule: main-content extraction over interleaved docs):
                                             extracted per-doc span sequence
 
 Scale shape: page synthesis, DOM parse, classification and PDF parse are
-all *narrow* maps over Arrow batches — zero shuffles; the only wide ops
-are the ones inside pipeline/extract.extract_spans (media attach + final
-per-doc window), already engineered for the 100 TB case. Every query here
+all *narrow* maps over Arrow batches — zero shuffles; the only wide op
+is inside pipeline/extract.extract_spans (the metadata-only missing-media
+anti-join; spans carry their split-time seq, so no per-doc window). Every query here
 is oracle-checked: the fixtures are pure functions of (doc_id, text), so
 the expected output — paragraph chunking, span offsets, page counts —
 is reconstructed in DuckDB SQL over the same documents table.

@@ -23,8 +23,11 @@ CHECKS = {
     "ocr_extract": (
         "the tiny span-metadata side broadcasts "
         "onto media (image bytes never shuffle), MapInPandas runs on the "
-        "media table's own partitioning; final sort+window per doc",
+        "media table's own partitioning; seq is numbered by posexplode at "
+        "split time, so the assembly is a plain union — no window, no sort, "
+        "no shuffle of output rows",
         ["MapInPandas", "BroadcastHashJoin"],
+        ["Window", "- Exchange ("],
     ),
     "broadcast_dim_join": (
         "part dim broadcast, partial aggregation before the shuffle",
@@ -66,9 +69,10 @@ CHECKS = {
     ),
     "web_extract": (
         "HTML→spans stage is narrow; span metadata broadcasts onto media "
-        "(image bytes never shuffle); the only exchange feeds the final "
-        "per-doc window",
+        "(image bytes never shuffle); spans carry their split-time seq, so "
+        "the assembly is a plain union — no window and no shuffle exchange",
         ["MapInPandas", "BroadcastHashJoin"],
+        ["Window", "- Exchange ("],
     ),
     "html_metadata": (
         "page metadata is ONE narrow MapInPandas — zero exchanges",

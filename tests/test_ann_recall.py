@@ -184,6 +184,28 @@ def test_ngram_jaccard_strategies_agree(spark):
         ngram_jaccard_pairs(few, threshold=0.5, strategy="Bitmap")
 
 
+@pytest.mark.parametrize("bound", ["MAX_BITMAP_VOCAB", "MAX_BITMAP_BYTES"])
+def test_ngram_bitmap_driver_collects_bounded(spark, monkeypatch, bound):
+    """strategy='bitmap' with the row guard off: an oversized vocab, or a
+    docs x vocab/8 matrix over the byte budget, raises before either
+    driver collect runs and points at strategy='join'."""
+    from pyspark.sql import DataFrame
+
+    from newocr_spark.analytics import dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"doc body {i} more words") for i in range(10)], "doc_id long, text string"
+    )
+    monkeypatch.setattr(dedup, bound, 4)
+
+    def no_collect(self):
+        raise AssertionError("collected past the bound")
+
+    monkeypatch.setattr(DataFrame, "collect", no_collect)
+    with pytest.raises(ValueError, match="strategy='join'"):
+        dedup.ngram_jaccard_pairs(docs, max_rows=None, strategy="bitmap")
+
+
 def test_lsh_neardup_pairs_recall_and_precision(spark, embeddings):
     """The banded-LSH pairs scale path vs the exact quadratic baseline at
     threshold 0.4: precision must be EXACTLY 1.0 (every emitted pair is

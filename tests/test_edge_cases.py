@@ -139,6 +139,26 @@ def test_png_inflation_bounded_by_header(model):
     assert out["error"][2].startswith("ValueError: PNG data longer than")
 
 
+def test_png_chunk_crc_checked():
+    """Every single-bit flip and every truncation of a PNG is a ValueError:
+    each chunk's stored CRC is checked, and a stream must reach IEND."""
+    png = encode_png(np.full((5, 7), 200, dtype=np.uint8))
+    for pos in range(len(png)):
+        for bit in range(8):
+            b = bytearray(png)
+            b[pos] ^= 1 << bit
+            with pytest.raises(ValueError):
+                decode_png(bytes(b))
+    for cut in range(len(png)):
+        with pytest.raises(ValueError):
+            decode_png(png[:cut])
+    idat_crc = len(png) - 12 - 4  # last byte of the IDAT chunk's CRC
+    b = bytearray(png)
+    b[idat_crc] ^= 1
+    with pytest.raises(ValueError, match="CRC"):
+        decode_png(bytes(b))
+
+
 def _declare_dims(buf: bytes, w: int, h: int) -> bytes:
     """``buf`` (PNG or BMP) with its header's width and height replaced;
     a PNG keeps a valid IHDR CRC, so only the size is wrong."""
@@ -214,10 +234,10 @@ def test_hostile_media_fuzz_through_map_in_pandas(spark, model):
             variants.append((f"flip{i}", bytes(b)))
         for w, h in ((100_000, 100_000), (2**31 - 1, 1), (7000, 7000), (60, 2**16)):
             variants.append((f"dims{w}x{h}", _declare_dims(good, w, h)))
-        rows += [(f"{kind}-{name}", 0, f"m-{kind}-{name}", bytearray(b)) for name, b in variants]
+        rows += [(f"{kind}-{name}", 0, 0, f"m-{kind}-{name}", bytearray(b)) for name, b in variants]
 
     media = spark.createDataFrame(
-        rows, "doc_id string, offset int, media_ref string, png binary"
+        rows, "doc_id string, seq int, offset int, media_ref string, png binary"
     ).repartition(3)
     bmodel = spark.sparkContext.broadcast(model)
     out = media.mapInPandas(make_ocr_udf(bmodel), OCR_OUTPUT_SCHEMA).collect()
@@ -231,6 +251,9 @@ def test_hostile_media_fuzz_through_map_in_pandas(spark, model):
         assert by_id[f"{kind}-dims100000x100000"].error.startswith("ImageTooLarge: ")
         assert by_id[f"{kind}-dims7000x7000"].error.startswith("ImageTooLarge: ")
         assert by_id[f"{kind}-trunc8"].error is not None
+    # every PNG byte lies in a CRC-checked chunk or the signature
+    png_flips = [r for r in out if r.doc_id.startswith("png-flip")]
+    assert len(png_flips) == 16 and all(r.error is not None for r in png_flips)
 
 
 # ---------------------------------------------------------------------------

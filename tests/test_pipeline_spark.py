@@ -222,7 +222,7 @@ def test_runner_broadcasts_only_its_groups_metadata(
     real_ocr = extract._ocr
 
     def spy(media, meta, bmodel):
-        seen.append(sorted(tuple(r) for r in meta.collect()))
+        seen.append(sorted(tuple(r) for r in meta.select("doc_id", "offset", "media_ref").collect()))
         return real_ocr(media, meta, bmodel)
 
     monkeypatch.setattr(extract, "_ocr", spy)
@@ -310,3 +310,110 @@ def test_runner_routes_through_sink_seam(spark, font_model, fixture_dir, tmp_pat
         (r.doc_id, r.seq, r.kind, r.text, r.media_ref) for r in golden.collect()
     )
     assert got == want
+
+
+def _extract_via(entry, spark, font_model, docs, media, tmp_path):
+    """``docs`` + ``media`` through ``extract_spans`` or a complete
+    ``ExtractRunner`` run."""
+    from newocr_spark.pipeline.extract import extract_spans
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
+
+    if entry == "extract_spans":
+        return extract_spans(spark, docs, media, font_model)
+    runner = ExtractRunner(
+        spark, font_model, str(tmp_path / "out"),
+        ParquetStateStore(spark, str(tmp_path / "state")), n_buckets=4, group_size=2,
+    )
+    runner.run(docs, media, input_snapshot="numbering", run_id="r1")
+    return runner.read_output()
+
+
+def _span_rows(df):
+    cols = ("doc_id", "seq", "kind", "text", "media_ref")
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("entry", ["extract_spans", "ExtractRunner"])
+def test_seq_of_unsorted_spans_matches_golden(spark, font_model, fixture_dir, tmp_path, entry):
+    """``seq`` follows offset order, not the spans array's order: every
+    document's spans reversed still number exactly as golden does."""
+    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
+    media = spark.read.parquet(f"{fixture_dir}/media.parquet")
+    golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
+    reversed_docs = docs.withColumn("spans", F.reverse("spans"))
+    row = reversed_docs.filter(F.size("spans") > 1).first()
+    assert row.spans[0].offset > row.spans[-1].offset
+    got = _extract_via(entry, spark, font_model, reversed_docs, media, tmp_path)
+    assert _span_rows(got) == _span_rows(golden)
+
+
+@pytest.mark.parametrize("entry", ["extract_spans", "ExtractRunner"])
+def test_seq_semantics_ties_duplicate_media_and_doc_rows(spark, font_model, tmp_path, entry):
+    """The numbering ``_split`` states: tied offsets order by (kind, text,
+    media_ref); a media_ref twice in the media table gives two rows with
+    one seq; two documents rows with one doc_id each number from 0."""
+    from newocr_spark.font.render import render_text_png
+
+    png = bytearray(render_text_png(["ok 1"], 2))
+    docs = spark.createDataFrame(
+        [
+            ("d1", [("text", "b", None, 5), ("media", None, "m1", 5),
+                    ("text", "a", None, 5), ("text", "z", None, 0)]),
+            ("d2", [("media", None, "m2", 3), ("text", "y", None, 1)]),
+            ("d3", [("text", "first", None, 0)]),
+            ("d3", [("text", "second", None, 0)]),
+        ],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    media = spark.createDataFrame(
+        [("m1", png), ("m2", png), ("m2", png)], "media_ref string, png binary"
+    )
+    got = _extract_via(entry, spark, font_model, docs, media, tmp_path)
+    rows = sorted((r.doc_id, r.seq, r.offset, r.text, r.media_ref, r.error) for r in got.collect())
+    assert rows == [
+        ("d1", 0, 0, "z", None, None),
+        ("d1", 1, 5, "ok 1", "m1", None),  # tie: 'media' < 'text'
+        ("d1", 2, 5, "a", None, None),
+        ("d1", 3, 5, "b", None, None),
+        ("d2", 0, 1, "y", None, None),
+        ("d2", 1, 3, "ok 1", "m2", None),  # one row per media copy, one seq
+        ("d2", 1, 3, "ok 1", "m2", None),
+        ("d3", 0, 0, "first", None, None),
+        ("d3", 0, 0, "second", None, None),
+    ]
+
+
+def test_resume_ignores_intermediate_without_seq(
+    spark, font_model, fixture_dir, tmp_path, monkeypatch
+):
+    """State and intermediate rows committed under the old key format, by
+    an OCR output that had no ``seq`` column, are not resumed from: the
+    schema digest in ``snapshot_key`` makes every bucket recompute, so the
+    assembly never reads a null ``seq``."""
+    from newocr_spark.pipeline import extract
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
+
+    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
+    media = spark.read.parquet(f"{fixture_dir}/media.parquet")
+    golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
+    state = ParquetStateStore(spark, str(tmp_path / "state"))
+    runner = ExtractRunner(
+        spark, font_model, str(tmp_path / "out"), state, n_buckets=4, group_size=2,
+        fail_after_groups=1,
+    )
+    real_ocr = extract._ocr
+    with monkeypatch.context() as old:
+        old.setattr(extract, "_ocr", lambda *a: real_ocr(*a).drop("seq"))
+        old.setattr(ExtractRunner, "snapshot_key", lambda self, s: f"{s}#b{self.n_buckets}")
+        with pytest.raises(RuntimeError, match="injected failure"):
+            runner.run(docs, media, input_snapshot="snap", run_id="old")
+    assert len(state.completed_buckets("snap#b4")) == 2
+
+    runner.fail_after_groups = None
+    stats = runner.run(docs, media, input_snapshot="snap", run_id="new")
+    assert stats["groups_run"] == 2
+    result = runner.read_output()
+    assert result.filter(F.col("seq").isNull()).count() == 0
+    assert _span_rows(result) == _span_rows(golden)
