@@ -72,31 +72,28 @@ def _ocr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ocr_assembled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O5 oracle-checked: per-doc span re-assembly in offset order.
-    sort_array(collect_list(struct(offset, repr))) orders by the first
-    struct field = offset (SURVEY §2f O5); the assembled doc is rendered
-    as one string so the DuckDB comparison is flat-typed."""
+    """O5 oracle-checked: per-doc span re-assembly in ``seq`` order
+    (``assemble_documents``); the assembled doc is rendered as one string
+    so the DuckDB comparison is flat-typed."""
     from pyspark.sql import functions as F
 
     from newocr_spark.artifacts import get_model
     from newocr_spark.fixtures import corpus_fixture_tables
-    from newocr_spark.pipeline.extract import extract_spans
+    from newocr_spark.pipeline.extract import assemble_documents, extract_spans
 
     model = get_model()
     docs, media = corpus_fixture_tables(spark, sf_dir, model, max_docs=OCR_MAX_DOCS)
-    extracted = extract_spans(spark, docs, media, model)
-    piece = F.concat_ws(
-        "|", "kind", F.coalesce("media_ref", F.lit("-")), F.coalesce("text", F.lit(""))
-    )
-    return extracted.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col("offset"), piece.alias("p")))),
-                lambda s: s["p"],
-            ),
-            " || ",
-        ).alias("doc_repr"),
-        F.count("*").alias("n_spans"),
+    assembled = assemble_documents(extract_spans(spark, docs, media, model))
+
+    def piece(s):
+        return F.concat_ws(
+            "|", s["kind"], F.coalesce(s["media_ref"], F.lit("-")), F.coalesce(s["text"], F.lit(""))
+        )
+
+    return assembled.select(
+        "doc_id",
+        F.array_join(F.transform("spans", piece), " || ").alias("doc_repr"),
+        F.size("spans").cast("long").alias("n_spans"),
     )
 
 

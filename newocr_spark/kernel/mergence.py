@@ -61,6 +61,7 @@ class _Ctx:
         self.hline = sims["horizontal-line"]
         self.pdot = sims["percent-dot"]
         self.pbase = sims["percent-base"]
+        self.labels = model.letters  # row → (letter, modifier), for set_next_closest
         meta = model.meta
         self.distancei = meta.get("distancei", 0.0)
         self.distancej = meta.get("distancej", 0.0)
@@ -408,6 +409,6 @@ def _process_letter(ctx: _Ctx, letter) -> None:
                 # trained model always offers alternatives, so this only
                 # guards degenerate test models
                 return
-            letter.set_next_closest()
+            letter.set_next_closest(ctx.labels)
             continue
         return

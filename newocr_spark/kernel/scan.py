@@ -41,7 +41,7 @@ import numpy as np
 
 from ..model import FontModel
 from .ccl import connected_components
-from .features import featurize, featurize_many
+from .features import featurize_many
 from .grid import binarize, rows_populated
 from .lines import line_bounds
 from .mergence import run_mergence
@@ -49,54 +49,39 @@ from .spacing import insert_spaces
 
 
 class ImageLetter:
-    """A matched glyph (character/ImageLetter.java). NN candidates are held
-    lazily as a row-index array into the broadcast model; setNextClosest
-    (ImageLetter.java:203-205) advances the pointer."""
+    """A matched glyph (character/ImageLetter.java): the state mergence,
+    spacing, font size and rendering read. ``letter``/``mod`` are the head
+    of ``cands``, the NN candidate order as row indices into the font
+    model's label table; setNextClosest (ImageLetter.java:203-205)
+    advances the pointer. Synthetic spaces have no candidates."""
 
     __slots__ = (
         "letter", "mod", "x", "y", "width", "height",
-        "avg_w", "avg_h", "ratio", "min_center", "max_center",
-        "amount_of_merges", "merged_pieces", "center_offset",
-        "_cands", "_cand_pos", "_model",
+        "amount_of_merges", "merged_pieces", "_cands", "_cand_pos",
     )
 
-    def __init__(self, letter, mod, x, y, width, height, avg_w, avg_h,
-                 ratio, min_center=0.0, max_center=0.0):
+    def __init__(self, letter, mod, x, y, width, height, cands=None):
         self.letter = letter
         self.mod = mod
         self.x = x
         self.y = y
         self.width = width
         self.height = height
-        self.avg_w = avg_w
-        self.avg_h = avg_h
-        self.ratio = ratio
-        self.min_center = min_center
-        self.max_center = max_center
         self.amount_of_merges = 0
         # pieces merged into this letter: [(letter, mod, height)] incl. self
         self.merged_pieces: list[tuple[str, int, int]] | None = None
-        self.center_offset = 0.0
-        self._cands = None       # np int array of model rows, best-first
+        self._cands = cands      # np int array of model rows, best-first
         self._cand_pos = 0       # current head position in _cands
-        self._model: FontModel | None = None
-
-    def attach_candidates(self, cands: np.ndarray, model: FontModel) -> None:
-        self._cands = cands
-        self._cand_pos = 0
-        self._model = model
 
     def has_next_closest(self) -> bool:
         return self._cands is not None and self._cand_pos + 1 < len(self._cands)
 
-    def set_next_closest(self) -> None:
-        """Adopt the next-best NN candidate's identity/averages."""
+    def set_next_closest(self, labels: list[tuple[str, int]]) -> None:
+        """Adopt the next-best NN candidate's identity. ``labels`` is the
+        (letter, modifier) table of the model that ranked the candidates
+        (``FontModel.letters``); the letter holds only row indices."""
         self._cand_pos += 1
-        j = int(self._cands[self._cand_pos])
-        m = self._model
-        self.letter, self.mod = m.letters[j]
-        self.avg_w = float(m.avg_width[j])
-        self.avg_h = float(m.avg_height[j])
+        self.letter, self.mod = labels[self._cands[self._cand_pos]]
 
     def merge(self, other: "ImageLetter") -> None:
         """CoordinateCharacter.merge (:30-77). Union bboxes; note the
@@ -116,10 +101,6 @@ class ImageLetter:
         self.x, self.y = min_x, min_y
         self.width = max_x - min_x
         self.height = max_y - min_y
-
-    def overlaps_x(self, other: "ImageLetter") -> bool:
-        """Character.isOverlappingX (character/Character.java:150-156)."""
-        return (self.x + self.width > other.x) and (other.x + other.width > self.x)
 
     def overlaps_y(self, other: "ImageLetter") -> bool:
         return (self.y + self.height > other.y) and (other.y + other.height > self.y)
@@ -141,20 +122,32 @@ _CAND_CACHE: OrderedDict = OrderedDict()
 _CAND_CACHE_MAX = 200_000
 
 
+# glyphs ranked per block: bounds the (rows, N, 17) float64 distance
+# temporary (about 29 MB against a 105-row model) however many distinct
+# glyphs one image misses, so a noise-filled page cannot exhaust a
+# worker's memory. Each row's sum and lexsort are row-local, so the block
+# size changes no bit of the result.
+_RANK_BLOCK = 2048
+
+
 def _rank_candidates(model: FontModel, feats: np.ndarray, ratios: np.ndarray) -> np.ndarray:
     """Vectorized NN ranking for a batch of glyphs → (g, N) int16 orders.
 
     score = sum((g - t)^2 over 17 segments)            (OCRUtils.java:90-99)
           + weight(letter) * (trained_ratio - glyph_ratio)^2
                                                        (OCRActions.java:248-258)
-    Ties break by (letter, modifier) for determinism: one lexsort over the
-    whole batch, with the tie keys broadcast to every row.
+    Ties break by (letter, modifier) for determinism: one lexsort per block
+    of ``_RANK_BLOCK`` glyphs, with the tie keys broadcast to every row.
     """
     T = model.segments
-    seg_d = ((feats[:, None, :] - T[None, :, :]) ** 2).sum(axis=-1)
     tr = np.nan_to_num(model.trained_ratios, nan=0.0)
-    scores = seg_d + model.ratio_weights[None, :] * (tr[None, :] - ratios[:, None]) ** 2
-    return _order_rows(scores, model.letter_codes, model.modifiers)
+    out = np.empty((len(feats), len(T)), np.int16)
+    for lo in range(0, len(feats), _RANK_BLOCK):
+        hi = lo + _RANK_BLOCK
+        seg_d = ((feats[lo:hi, None, :] - T[None, :, :]) ** 2).sum(axis=-1)
+        scores = seg_d + model.ratio_weights[None, :] * (tr[None, :] - ratios[lo:hi, None]) ** 2
+        out[lo:hi] = _order_rows(scores, model.letter_codes, model.modifiers)
+    return out
 
 
 def _order_rows(scores: np.ndarray, letter_codes: np.ndarray, mods: np.ndarray) -> np.ndarray:
@@ -193,7 +186,10 @@ def _candidates_for(comps, model: FontModel) -> list[np.ndarray]:
 
 
 def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageLetter]]]:
-    """bool grid → [(line_y, [ImageLetter sorted by x])] (OCRScan.scanImage)."""
+    """bool grid → [(line_y, [ImageLetter sorted by x])] (OCRScan.scanImage),
+    lines in center order. Each matched letter is labelled by the head of
+    its candidate order and holds that order; no other model data is
+    copied onto it."""
     # G1 — line bounds on the uncut grid
     bounds = line_bounds(
         rows_populated(grid), model.config.max_percent_diff_to_merge
@@ -221,22 +217,13 @@ def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageL
             continue
         free[idx] = False
         idx = idx[np.argsort(comps.x[idx], kind="stable")]
-        orders = [cands[i] for i in idx.tolist()]
-        heads = np.fromiter((o[0] for o in orders), np.int64, len(orders))
-        w, h = comps.width[idx], comps.height[idx]
-        matched = []
-        for order, head, x, y, wi, hi, ratio, aw, ah, mnc, mxc in zip(
-            orders, heads.tolist(), comps.x[idx].tolist(), comps.y[idx].tolist(),
-            w.tolist(), h.tolist(), (w / h).tolist(),
-            model.avg_width[heads].tolist(), model.avg_height[heads].tolist(),
-            model.min_center[heads].tolist(), model.max_center[heads].tolist(),
-        ):
-            letter, mod = model.letters[head]
-            il = ImageLetter(letter, mod, x, y, wi, hi, aw, ah, ratio, mnc, mxc)
-            il.center_offset = hi / 2.0
-            il.attach_candidates(order, model)
-            matched.append(il)
-        sorted_lines.append((center_y, matched))
+        sorted_lines.append((center_y, [
+            ImageLetter(*model.letters[cands[i][0]], x, y, w, h, cands[i])
+            for i, x, y, w, h in zip(
+                idx.tolist(), comps.x[idx].tolist(), comps.y[idx].tolist(),
+                comps.width[idx].tolist(), comps.height[idx].tolist(),
+            )
+        ]))
 
     # M1-M6 — mergence (mutates lines in place, may drop emptied lines)
     sorted_lines = run_mergence(sorted_lines, model)
@@ -247,11 +234,9 @@ def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageL
             font_size = max(l.height for l in line)
             line.extend(insert_spaces(line, font_size, model))
 
-    # O1/O2 — final ordering
-    out: list[tuple[int, list[ImageLetter]]] = []
-    for y, line in sorted(sorted_lines, key=lambda e: e[0]):
-        out.append((y, sorted(line, key=lambda l: l.x)))
-    return out
+    # O1/O2 — lines are already in center order (line_entries is sorted
+    # and mergence only drops lines); merges and spaces reorder letters
+    return [(y, sorted(line, key=lambda l: l.x)) for y, line in sorted_lines]
 
 
 def render_text(lines: list[tuple[int, list[ImageLetter]]]) -> str:
@@ -266,7 +251,4 @@ def scan_image_bytes(png: bytes, model: FontModel) -> str:
     return render_text(scan_grid(binarize(decode_png(png)), model))
 
 
-__all__ = [
-    "ImageLetter", "scan_grid", "render_text", "scan_image_bytes",
-    "featurize",  # re-export for kernel consumers
-]
+__all__ = ["ImageLetter", "scan_grid", "render_text", "scan_image_bytes"]

@@ -56,12 +56,7 @@ def insert_spaces(line: list, font_size: int, model: "FontModel") -> list:
             spaces = space_round(gap / used_width)
         for i in range(max(0, spaces)):
             out.append(
-                ImageLetter(
-                    " ", 0,
-                    int(left_x + used_width * i), cur.y,
-                    int(used_width), font_size,
-                    used_width, float(font_size), space_ratio,
-                )
+                ImageLetter(" ", 0, int(left_x + used_width * i), cur.y, int(used_width), font_size)
             )
         prev = cur
     return out

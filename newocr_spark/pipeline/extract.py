@@ -165,10 +165,11 @@ def extract_spans(
 
 def assemble_documents(extracted: DataFrame) -> DataFrame:
     """O5: splice recognized spans back into per-doc ordered arrays.
-    sort_array on struct sorts by the first field = offset (SURVEY §2f O5)."""
+    sort_array on struct sorts by the first field = ``seq``, the offset
+    order ``_split`` numbered, ties included (SURVEY §2f O5)."""
     return extracted.groupBy("doc_id").agg(
         F.sort_array(
-            F.collect_list(F.struct("offset", "seq", "kind", "text", "media_ref"))
+            F.collect_list(F.struct("seq", "offset", "kind", "text", "media_ref"))
         ).alias("spans"),
         F.sum("glyph_count").alias("glyph_count"),
         F.max(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("has_error"),

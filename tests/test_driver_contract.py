@@ -4,35 +4,12 @@ schema-by-name, values), at sf0.001 for speed (the driver runs sf0.01)."""
 
 import math
 
-import duckdb
 import pandas as pd
 import pytest
 
+from scripts.correctness_local import _duck, _normalize
+
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _duck(sql: str) -> pd.DataFrame:
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    return con.execute(sql).df()
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif pd.api.types.is_float_dtype(df[c]):
-            df[c] = df[c].round(6)
-        elif pd.api.types.is_integer_dtype(df[c]):
-            df[c] = df[c].astype("int64")
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
 def _query_names():
@@ -47,7 +24,7 @@ def test_query_vs_oracle(spark, name):
     import __spark_entry__ as e
 
     sdf = e.queries()[name](spark, SF_DIR).toPandas()
-    odf = _duck(e.oracle_sql()[name])
+    odf = _duck(e.oracle_sql()[name], SF_DIR)
     assert sorted(sdf.columns) == sorted(odf.columns), (
         f"{name}: column mismatch {sorted(sdf.columns)} vs {sorted(odf.columns)}"
     )

@@ -219,6 +219,56 @@ def test_order_rows_matches_per_row_lexsort():
             assert got[i].tolist() == np.lexsort((mods, codes, scores[i])).tolist()
 
 
+def test_rank_blocks_equal_one_unblocked_rank(monkeypatch):
+    """Ranking in blocks of ``_RANK_BLOCK`` glyphs gives every row the order
+    one unblocked rank gives it. Model rows repeat three segment vectors
+    and share letter codes, and glyph features repeat too, so scores and
+    letters tie and the modifier breaks the tie."""
+    from types import SimpleNamespace
+
+    from newocr_spark.kernel import scan
+
+    rng = np.random.RandomState(5)
+    n = 30
+    model = SimpleNamespace(
+        segments=rng.rand(3, 17)[rng.randint(0, 3, size=n)],
+        trained_ratios=np.where(rng.rand(n) < 0.2, np.nan, rng.randint(1, 4, size=n) / 2.0),
+        ratio_weights=rng.randint(0, 3, size=n).astype(np.float64),
+        letter_codes=rng.randint(33, 40, size=n),
+        modifiers=rng.randint(0, 3, size=n),
+    )
+    g_count = 2 * scan._RANK_BLOCK + 3
+    feats = np.vstack([model.segments, rng.rand(5, 17)])[rng.randint(0, n + 5, size=g_count)]
+    ratios = rng.randint(1, 4, size=g_count) / 2.0
+    got = scan._rank_candidates(model, feats, ratios)
+    monkeypatch.setattr(scan, "_RANK_BLOCK", g_count)
+    want = scan._rank_candidates(model, feats, ratios)
+    assert got.dtype == np.int16 and got.shape == (g_count, n)
+    assert np.array_equal(got, want)
+
+
+def test_noise_page_rank_memory_is_bounded(monkeypatch):
+    """A noise-filled page misses the glyph cache with tens of thousands of
+    distinct glyphs; ranking them in blocks keeps scan_grid's traced peak
+    far below the unblocked (g, N, 17) distance tensor (about 670 MB)."""
+    import tracemalloc
+
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.kernel import scan
+
+    monkeypatch.setattr(scan, "_CAND_CACHE", type(scan._CAND_CACHE)())
+    m = get_model()
+    grid = np.random.default_rng(0).random((2000, 2000)) < 0.3
+    tracemalloc.start()
+    try:
+        scan.scan_grid(grid, m)
+        _cur, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert len(scan._CAND_CACHE) > 40_000
+    assert peak < 256e6
+
+
 def test_glyph_cache_ranks_each_missed_key_once(monkeypatch):
     """A glyph that misses the cache several times in one image is
     featurized once; a second scan of the image featurizes nothing."""

@@ -51,6 +51,26 @@ def test_assembled_documents_ordered(spark, font_model, fixture_dir):
     assert offsets == sorted(offsets)
 
 
+def test_ocr_assembled_orders_tied_offsets_by_seq(spark, monkeypatch):
+    """The O5 query assembles each doc in ``seq`` order: a media span and a
+    text span at one offset come out media first, as ``_split`` numbers
+    them ('media' < 'text'), not by the rendered span string."""
+    import __spark_entry__ as e
+    from newocr_spark import fixtures
+    from newocr_spark.font.render import render_text_png
+
+    docs = spark.createDataFrame(
+        [("d1", [("text", "b", None, 5), ("media", None, "m1", 5), ("text", "z", None, 0)])],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    media = spark.createDataFrame(
+        [("m1", bytearray(render_text_png(["ok 1"], 2)))], "media_ref string, png binary"
+    )
+    monkeypatch.setattr(fixtures, "corpus_fixture_tables", lambda *a, **k: (docs, media))
+    rows = [tuple(r) for r in e._ocr_assembled(spark, "unused").collect()]
+    assert rows == [("d1", "text|-|z || text|m1|ok 1 || text|-|b", 3)]
+
+
 def _make_state(spark, tmp_path, kind):
     """The resume guarantees must hold through the StateStore INTERFACE,
     not through parquet semantics — parameterizing the suite over a
