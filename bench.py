@@ -1,17 +1,27 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+Runs the OCR flagship and the headline queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
+JSON line:
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>,
-   "ocr": {"docs": n, "chars": n, "docs_per_sec": x, "chars_per_sec": x}}
+   "queries": {name: sec, ...}, "sf": <sf>, "cpus": n,
+   "ocr": {"docs": n, "media_chars": n, "docs_per_sec": x, ...},
+   "web": {...}, "dupheavy": {...},
+   "noise": {"cycles": CYCLES, "flagged": {name: max/min}},
+   "vs_prev": {"prev_round": n, "ratios": {name: cur/prev}}}
+
+One protocol times every entry, OCR included: CYCLES full passes over the
+whole entry list, each entry reporting the min over its cycles. Passes of
+one entry are minutes apart, so a host noise window that inflates one
+capture has usually passed by the next. Entries whose cycles differ by
+more than 3x land in noise.flagged.
 
 The OCR flagship measures end-to-end extraction throughput (decode →
 binarize → segment → featurize → broadcast-NN → merge → space → assemble)
-over media rendered from the scale factor's text corpus; relational
-queries force full materialization via the noop sink.
+over media rendered from the scale factor's text corpus; every entry is
+forced to full materialization via the noop sink.
 """
 
 from __future__ import annotations
@@ -51,33 +61,23 @@ BENCH_QUERIES = (
     "neardup_recall", "semdedup",
 )
 
-# Queries whose IMPLEMENTATION deliberately grew between rounds. The warm
-# floor folds every recorded same-sf round, so a query that now computes
-# strictly more than when an old floor was recorded would read as
-# regression_suspect forever against a floor that measures a smaller job.
-# These are exempted from the floor-based regression check and reported
-# under noise.design_changed WITH the measured vs-floor ratio and the
-# reason — the number stays visible, labeled as an expected cost change
-# instead of a suspected regression, so the artifact cannot hide a real
-# slowdown behind the exemption.
-DESIGN_CHANGED = {
-    "repetition_stats": (
-        "round 5 extended the gate from tokens+bigrams to the full Gopher "
-        "battery (top 2-4-gram fractions + duplicate 5-10-gram character "
-        "fractions, Rae et al. 2021 table A1): ~4x the gram streams of the "
-        "bigram-only implementation the pre-r5 floors measure"
-    ),
-}
+# full passes over every entry; each entry reports the min of its passes
+CYCLES = 3
 
 
 def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 24) -> dict:
+    import shutil
+    import tempfile
+
     from pyspark.sql import functions as F
 
+    from newocr_spark.analytics import dedup as D
     from newocr_spark.artifacts import get_model
     from newocr_spark.fixtures import corpus_fixture_tables
     from newocr_spark.pipeline.extract import extract_spans
-    from newocr_spark.pipeline.session import build_session
+    from newocr_spark.pipeline.session import build_session, warm_python_workers
     from newocr_spark.queries import QUERIES
+    from newocr_spark.web import extract as W
 
     spark = build_session(
         app="newocr-bench", master=f"local[{cpus}]", shuffle_partitions=cpus,
@@ -90,15 +90,17 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    timings: dict[str, float] = {}
-
-    # ---- OCR flagship: fixture build (driver-side, excluded from timing) ----
+    # ---- OCR flagship fixture (built once, untimed) ----
     model = get_model()
     docs0, media0 = corpus_fixture_tables(spark, sf_dir, model, max_docs=ocr_docs)
     # replicate with distinct media_refs so the timed section is long enough
-    # that per-job fixed costs don't dominate the throughput figure
+    # that per-job fixed costs don't dominate the throughput figure; written
+    # to parquet rather than cached, because every timed pass ends with
+    # clearCache() and a cached input would be re-rendered inside the timing
     reps = spark.range(ocr_replicate).select(F.col("id").alias("rep"))
-    docs = (
+    fixture = tempfile.mkdtemp(prefix="newocr-bench-")
+    docs_path, media_path = f"{fixture}/documents", f"{fixture}/media"
+    (
         docs0.crossJoin(reps)
         .select(
             F.concat_ws("-", "doc_id", "rep").alias("doc_id"),
@@ -111,73 +113,28 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
             ).alias("spans"),
         )
         .repartition(cpus * 2)
-        .cache()
+        .write.parquet(docs_path)
     )
-    media = (
+    (
         media0.crossJoin(reps)
         .select(F.concat_ws("-", "media_ref", "rep").alias("media_ref"), "png")
         .repartition(cpus * 2)
-        .cache()
+        .write.parquet(media_path)
     )
-    n_docs = docs.count()
-    media.count()
-
-    from newocr_spark.pipeline.session import warm_python_workers
 
     warm_python_workers(spark, cpus)
 
-    def ocr_pass():
-        extracted = extract_spans(spark, docs, media, model)
-        return extracted.agg(
-            F.sum("glyph_count").alias("glyphs"),
-            F.sum(F.length("text")).alias("chars"),
-            F.count("*").alias("spans"),
-        ).collect()[0]
-
-    # The OCR pass first warms to steady state (JVM C2 + worker glyph
-    # caches converge over several passes, like any long-running job),
-    # then reports best-of-2 — its multi-pass protocol is noise-robust by
-    # construction; the other queries use the alternating-cycle protocol
-    # below.
-    prev = None
-    for _ in range(4):
-        t0 = time.time()
-        ocr_pass()
-        cur = time.time() - t0
-        if prev is not None and cur > prev * 0.95:
-            break
-        prev = cur
-    ocr_sec = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        stats = ocr_pass()
-        ocr_sec = min(ocr_sec, time.time() - t0)
-    timings["ocr_extract"] = round(ocr_sec, 3)
-    docs.unpersist()
-    media.unpersist()  # keep heap pressure away from the analytic queries
-
-    # ---- relational + analytics + web queries: alternating-cycle protocol ----
-    # This VM has documented multi-minute noise windows that inflate a
-    # single capture up to ~8-10x (BENCH.md appendix, round-2 evidence).
-    # Instead of best-of-2 ADJACENT passes (both can land inside one
-    # window), run the FULL query list twice — the second cycle starts
-    # minutes after the first touched any given query, so a window that
-    # polluted a query in cycle 1 has usually passed by cycle 2 (same
-    # alternating idea as scripts/scaling_bench.py). Report min across
-    # cycles; where the cycles disagree >3x, re-measure once more and
-    # flag the query in the output so the artifact is self-describing.
-    from newocr_spark.web import extract as W
+    def _ocr():
+        return extract_spans(
+            spark, spark.read.parquet(docs_path), spark.read.parquet(media_path), model
+        )
 
     no_cap = 1 << 40
     n_web_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    # partitions=cpus*2: the sf testdata is ONE parquet row group — without
-    # an explicit spread the narrow extraction maps run on a single task; a
-    # real crawl input arrives pre-split across thousands of files
-    runnables = {name: (lambda n=name: QUERIES[n](spark, sf_dir)) for name in BENCH_QUERIES}
-    # web extraction (north_rule): html/pdf run UNCAPPED over the sf's
-    # whole documents table (narrow maps — the numbers scale with corpus
-    # size); web_extract keeps its contract cap (OCR-bound end-to-end
-    # path, already measured above).
+    runnables = {"ocr_extract": _ocr}
+    runnables.update(
+        {name: (lambda n=name: QUERIES[n](spark, sf_dir)) for name in BENCH_QUERIES}
+    )
     # duplicate-heavy dedup (hot-bucket evidence): every sf doc replicated
     # DUP_COPIES times with distinct ids — the 30-50%-exact-copy shape of a
     # real crawl, concentrated. Pre-collapse, banding raw docs emitted
@@ -187,8 +144,6 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
     # plus the linear exact-group/expansion cost of 20x the rows — NOT 400x
     # its wall. tests/test_dedup_hotbucket.py pins the candidate counts;
     # this entry records the wall-clock consequence every round.
-    from newocr_spark.analytics import dedup as D
-
     DUP_COPIES = 20
 
     def _dupheavy():
@@ -203,6 +158,12 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
         return D.dup_clusters(corpus)
 
     runnables["dedup_dupheavy"] = _dupheavy
+    # web extraction (north_rule): html/pdf run UNCAPPED over the sf's
+    # whole documents table (narrow maps — the numbers scale with corpus
+    # size); web_extract keeps its contract cap (OCR-bound end-to-end
+    # path). partitions=cpus*2: the sf testdata is ONE parquet row group —
+    # without an explicit spread the narrow extraction maps run on a single
+    # task; a real crawl input arrives pre-split across thousands of files
     runnables.update(
         {
             "html_main_text": lambda: W.q_html_main_text(
@@ -231,64 +192,30 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
         spark.catalog.clearCache()
         return sec
 
-    cycles: dict[str, list[float]] = {name: [] for name in runnables}
-    for _cycle in range(2):
-        for name, fn in runnables.items():
-            cycles[name].append(timed_pass(fn))
-    noise: dict[str, float] = {}
-    regression_suspect: dict[str, float] = {}
-    design_changed: dict[str, dict] = {}
-    budget_exhausted: list[str] = []
-    # cycles disagreeing wildly -> captures sat in noise windows; keep
-    # adding spaced observations (up to 7 per query) until two agree
-    # within 3x, so the reported min survives even a day where several
-    # consecutive windows hit (observed: a 2s query reading 77s, a 4.5s
-    # query reading 43s). A GLOBAL retry budget bounds total runtime on a
-    # day where the whole session is noisy; the flags record whatever
-    # instability remains: a query left unresolved when the budget runs
-    # out lands in budget_exhausted so an inflated number can never read
-    # as clean (VERDICT r3 #4 — r03's ann_lsh 14.7s vs 4.5s warm).
-    retry_budget = 12
+    try:
+        cycles: dict[str, list[float]] = {name: [] for name in runnables}
+        for _cycle in range(CYCLES):
+            for name, fn in runnables.items():
+                cycles[name].append(timed_pass(fn))
+        # untimed: the OCR output's counts, for the throughput figures
+        n_docs = spark.read.parquet(docs_path).count()
+        stats = _ocr().agg(
+            F.sum("glyph_count").alias("glyphs"),
+            F.sum(F.when(F.col("media_ref").isNotNull(), F.length("text"))).alias("media_chars"),
+        ).collect()[0]
+    finally:
+        shutil.rmtree(fixture, ignore_errors=True)
 
-    # BOTH cycles can land in one noise regime and agree on an inflated
-    # number — catch that against the per-query WARM FLOOR (min across all
-    # recorded same-sf rounds and the last local run; a single prior round
-    # can itself be noise-inflated). Regressions >3x the floor on an
-    # unchanged plan are VM noise until proven otherwise, and if real they
-    # deserve the flag anyway.
-    cur_sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    prev_q = _warm_floor(cur_sf)
-    prev_ok = bool(prev_q)
-
-    def _agreed(obs) -> bool:
-        lo = min(obs)
-        return sum(1 for o in obs if o <= lo * 3.0) >= 2
-
+    timings: dict[str, float] = {}
+    flagged: dict[str, float] = {}
     for name, obs in cycles.items():
-        p = prev_q.get(name) if prev_ok else None
-        # a floor recorded before an intentional cost increase measures a
-        # smaller job — don't chase it with retries or flag it as a
-        # regression; the ratio is still reported (design_changed below)
-        p_guard = None if name in DESIGN_CHANGED else p
-
-        def _resolved() -> bool:
-            return _agreed(obs) and not (p_guard and min(obs) > 3.0 * p_guard)
-
-        while not _resolved() and len(obs) < 7 and retry_budget > 0:
-            obs.append(timed_pass(runnables[name]))
-            retry_budget -= 1
-        if max(obs) / max(min(obs), 1e-9) > 3.0:
-            noise[name] = round(max(obs) / max(min(obs), 1e-9), 2)
-        if p_guard and min(obs) > 3.0 * p_guard:
-            regression_suspect[name] = round(min(obs) / p_guard, 2)
-        if name in DESIGN_CHANGED and p and min(obs) > 3.0 * p:
-            design_changed[name] = {
-                "vs_floor": round(min(obs) / p, 2),
-                "note": DESIGN_CHANGED[name],
-            }
-        if not _resolved() and retry_budget <= 0:
-            budget_exhausted.append(name)
         timings[name] = round(min(obs), 3)
+        spread = max(obs) / max(min(obs), 1e-9)
+        if spread > 3.0:
+            flagged[name] = round(spread, 2)
+    ocr_sec = timings["ocr_extract"]
+    media_chars = int(stats.media_chars or 0)
+    glyphs = int(stats.glyphs or 0)
 
     total = round(sum(timings.values()), 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -308,11 +235,11 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
         "cpus": cpus,
         "ocr": {
             "docs": int(n_docs),
-            "media_chars": int(stats.chars or 0) // 2,  # half the span chars are media-recognized
-            "glyphs": int(stats.glyphs or 0),
+            "media_chars": media_chars,
+            "glyphs": glyphs,
             "docs_per_sec": round(n_docs / ocr_sec, 2),
-            "chars_per_sec": round((int(stats.chars or 0) // 2) / ocr_sec, 2),
-            "glyphs_per_sec": round(int(stats.glyphs or 0) / ocr_sec, 2),
+            "chars_per_sec": round(media_chars / ocr_sec, 2),
+            "glyphs_per_sec": round(glyphs / ocr_sec, 2),
         },
         "web": {
             "docs": int(n_web_docs),
@@ -329,24 +256,10 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
                 timings["dedup_dupheavy"] / max(timings["dedup_clusters"], 1e-9), 2
             ),
         },
-        # min-over-alternating-cycles protocol: per-query noise flags
-        # (max/min across spaced observations where cycles disagreed >3x —
-        # the flagged queries' mins are still the best repeatable estimate,
-        # the flag marks an unstable measurement environment, not the plan).
-        # regression_suspect: min still >3x the previous same-sf round after
-        # retries (either a real regression or agreeing-but-inflated cycles);
-        # budget_exhausted: unresolved when the global retry budget ran out —
-        # numbers in either list must NOT be read as clean.
-        "noise": {
-            "cycles": 2,
-            "flagged": noise,
-            "regression_suspect": regression_suspect,
-            # design_changed: min > 3x a floor that predates an intentional
-            # implementation growth (DESIGN_CHANGED) — an expected cost
-            # change, reported with its ratio + reason, NOT a regression.
-            "design_changed": design_changed,
-            "budget_exhausted": budget_exhausted,
-        },
+        # flagged: entries whose cycles differ by more than 3x (max/min);
+        # their min is still the best repeatable estimate, the flag marks an
+        # unstable host, not the plan
+        "noise": {"cycles": CYCLES, "flagged": flagged},
     }
     spark.stop()
     result["vs_prev"] = _vs_prev(timings)
@@ -373,64 +286,9 @@ def _load_prev() -> tuple:
             data = json.load(f)
         # the driver wraps the bench line under "parsed"
         inner = data.get("parsed") or data
-        q = inner.get("queries")
-        sf = inner.get("sf", data.get("sf"))
-        if not q:
-            # The driver records only the LAST 2000 chars of stdout; when a
-            # round's JSON line outgrew that window (r03 did), parsed is
-            # null and the tail starts mid-queries. Recover the per-query
-            # floats from the tail, stopping before the ocr/web/noise/
-            # vs_prev sections whose floats would masquerade as timings.
-            tail = data.get("tail") or ""
-            for marker in ('"ocr"', '"web"', '"noise"', '"vs_prev"'):
-                cut = tail.find(marker)
-                if cut != -1:
-                    tail = tail[:cut]
-            q = {
-                k: float(v)
-                for k, v in re.findall(r'"([a-z_0-9]+)":\s*([0-9]+\.[0-9]+)', tail)
-            }
-            q.pop("value", None)
-            q.pop("sf", None)
-        return n, sf, q or {}
+        return n, inner.get("sf", data.get("sf")), inner.get("queries") or {}
     except Exception:
         return None, None, {}
-
-
-def _warm_floor(cur_sf: str) -> dict:
-    """Per-query minimum across every recorded same-sf source: all
-    BENCH_r{N}.json rounds (parsed or tail-recovered) plus the last local
-    full run. The floor is the best warm estimate of what each query
-    really costs; the regression guard measures against it."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    floor: dict[str, float] = {}
-
-    def fold(sf, q) -> None:
-        if str(sf) != cur_sf or not q:
-            return
-        for k, v in q.items():
-            if isinstance(v, (int, float)) and v > 0:
-                floor[k] = min(floor.get(k, v), v)
-
-    _, sf, q = _load_prev()
-    fold(sf, q)
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-            inner = data.get("parsed") or data
-            fold(inner.get("sf", data.get("sf")), inner.get("queries", {}))
-        except Exception:
-            continue
-    try:
-        with open(os.path.join(here, "BENCH_last_run.json")) as f:
-            last = json.load(f)
-        fold(last.get("sf"), last.get("queries", {}))
-    except Exception:
-        pass
-    return floor
 
 
 def _vs_prev(timings: dict[str, float]) -> dict:
@@ -452,28 +310,21 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     result = run_bench(sf_dir, cpus)
-    # Full artifact on disk; stdout stays ONE line that FITS the driver's
-    # 2000-char tail capture — r03's line outgrew it (vs_prev ratios for
-    # every query) and the driver recorded parsed=null, losing the
-    # structured numbers. Trim the optional sections until it fits.
+    # Full artifact on disk; the stdout line keeps only the vs_prev ratios
+    # that moved (>= 1.3x slower or <= 0.77x, i.e. 1.3x faster)
     here = os.path.dirname(os.path.abspath(__file__))
     try:
         with open(os.path.join(here, "BENCH_last_run.json"), "w") as f:
             json.dump(result, f, indent=1)
     except OSError:
         pass
-    line = json.dumps(result)
     ratios = result.get("vs_prev", {}).get("ratios")
-    if len(line) > 1900 and ratios:
+    if ratios:
         result["vs_prev"]["ratios"] = {
             k: v for k, v in ratios.items() if v >= 1.3 or v <= 0.77
         }
         result["vs_prev"]["note"] = "full ratio set in BENCH_last_run.json"
-        line = json.dumps(result)
-    if len(line) > 1950:
-        result.pop("vs_prev", None)
-        line = json.dumps(result)
-    print(line)
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":

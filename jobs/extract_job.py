@@ -18,6 +18,7 @@ is about group-size / buckets of the corpus's span metadata.
 from __future__ import annotations
 
 import argparse
+import json
 
 
 def main() -> None:
@@ -55,7 +56,7 @@ def main() -> None:
     docs = spark.read.parquet(args.documents)
     media = spark.read.parquet(args.media)
     stats = runner.run(docs, media, input_snapshot=args.snapshot, run_id=args.run_id)
-    print(stats)
+    print(json.dumps(stats, sort_keys=True))
 
 
 if __name__ == "__main__":

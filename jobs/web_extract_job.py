@@ -21,6 +21,7 @@ fixture corpus (doc_id, text) is synthesized into pages first.
 from __future__ import annotations
 
 import argparse
+import json
 
 
 def main() -> None:
@@ -56,7 +57,7 @@ def main() -> None:
         n_buckets=args.buckets, group_size=args.group_size,
     )
     stats = runner.run(docs, media, input_snapshot=args.snapshot, run_id=args.run_id)
-    print(stats)
+    print(json.dumps(stats, sort_keys=True))
 
 
 if __name__ == "__main__":

@@ -4,8 +4,9 @@ This is the UDF-local core (SURVEY §3.1 steps 3-10) — numpy over the
 image's component arrays, with Python-level work paid per glyph-cache miss
 and per matched letter, not per pixel or per component object. Pipeline:
 
-  line_bounds (G1) → connected_components (G2/G3) → featurize (G5)
+  line_bounds (G1) → connected_components (G2/G3)
   → line assignment, consume-on-match (J2/X1, OCRScan.java:142-166)
+  → featurize (G5) of the components that landed in a line
   → vectorized NN vs the broadcast font model (J1, OCRActions.java:197-269)
   → mergence rules (M1-M6) → space insertion (O3, OCRScan.java:189-238)
   → assembly (O1/O2/O4).
@@ -156,17 +157,18 @@ def _order_rows(scores: np.ndarray, letter_codes: np.ndarray, mods: np.ndarray) 
     return np.lexsort(keys, axis=-1).astype(np.int16)
 
 
-def _candidates_for(comps, model: FontModel) -> list[np.ndarray]:
-    """Candidate order per component, via the worker-local glyph cache.
-    The image's misses are featurized and ranked together, each distinct
+def _candidates_for(comps, idx: np.ndarray, model: FontModel) -> list[np.ndarray]:
+    """Candidate order per component in ``idx``, via the worker-local glyph
+    cache. The misses are featurized and ranked together, each distinct
     key once."""
+    sigs = comps.signatures()
     keys = list(zip(
-        repeat(model.digest), comps.height.tolist(), comps.width.tolist(),
-        comps.signatures(),
+        repeat(model.digest), comps.height[idx].tolist(), comps.width[idx].tolist(),
+        [sigs[i] for i in idx.tolist()],
     ))
     out: list = []
     misses: dict = {}  # key → first component index with it
-    for i, key in enumerate(keys):
+    for i, key in zip(idx.tolist(), keys):
         hit = _CAND_CACHE.get(key)
         if hit is not None:
             _CAND_CACHE.move_to_end(key)
@@ -174,9 +176,9 @@ def _candidates_for(comps, model: FontModel) -> list[np.ndarray]:
             misses[key] = i
         out.append(hit)
     if misses:
-        idx = np.fromiter(misses.values(), np.int64, len(misses))
-        feats = featurize_many(comps.grids(idx))
-        orders = _rank_candidates(model, feats, comps.width[idx] / comps.height[idx])
+        miss = np.fromiter(misses.values(), np.int64, len(misses))
+        feats = featurize_many(comps.grids(miss))
+        orders = _rank_candidates(model, feats, comps.width[miss] / comps.height[miss])
         ranked = dict(zip(misses, orders))
         _CAND_CACHE.update(ranked)
         while len(_CAND_CACHE) > _CAND_CACHE_MAX:
@@ -194,15 +196,14 @@ def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageL
     bounds = line_bounds(
         rows_populated(grid), model.config.max_percent_diff_to_merge
     )
-    # G2/G3/G5 — components in discovery order, featurized + ranked
+    # G2/G3 — components in discovery order
     comps = connected_components(grid)
-    cands = _candidates_for(comps, model)
 
     # J2 — line assignment: lines sorted by rounded center; each remaining
     # glyph whose vertical center falls in-bounds is consumed in discovery
-    # order (OCRScan.java:142-166). Read off the bbox arrays; letters are
-    # built only for the matched components, already in x order (a stable
-    # sort of discovery order, as the reference's Collections.sort)
+    # order (OCRScan.java:142-166). Read off the bbox arrays; each line's
+    # components are put in x order (a stable sort of discovery order, as
+    # the reference's Collections.sort)
     line_entries = sorted(
         ((top, bottom, int(np.floor((bottom - top) / 2.0 + top + 0.5)))
          for top, bottom in bounds),
@@ -210,20 +211,27 @@ def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageL
     )
     centers = comps.y + comps.height / 2.0
     free = np.ones(len(comps), dtype=bool)
-    sorted_lines: list[tuple[int, list[ImageLetter]]] = []
+    lines: list[tuple[int, np.ndarray]] = []
     for top, bottom, center_y in line_entries:
         idx = np.flatnonzero(free & (centers >= top) & (centers <= bottom))
-        if not len(idx):
-            continue
-        free[idx] = False
-        idx = idx[np.argsort(comps.x[idx], kind="stable")]
-        sorted_lines.append((center_y, [
+        if len(idx):
+            free[idx] = False
+            lines.append((center_y, idx[np.argsort(comps.x[idx], kind="stable")]))
+
+    # G5/J1 — only the components that landed in a line are featurized and
+    # ranked; letters are built for them, line by line
+    matched = np.concatenate([np.zeros(0, np.int64)] + [idx for _y, idx in lines])
+    cands = dict(zip(matched.tolist(), _candidates_for(comps, matched, model)))
+    sorted_lines = [
+        (center_y, [
             ImageLetter(*model.letters[cands[i][0]], x, y, w, h, cands[i])
             for i, x, y, w, h in zip(
                 idx.tolist(), comps.x[idx].tolist(), comps.y[idx].tolist(),
                 comps.width[idx].tolist(), comps.height[idx].tolist(),
             )
-        ]))
+        ])
+        for center_y, idx in lines
+    ]
 
     # M1-M6 — mergence (mutates lines in place, may drop emptied lines)
     sorted_lines = run_mergence(sorted_lines, model)

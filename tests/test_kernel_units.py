@@ -249,8 +249,9 @@ def test_rank_blocks_equal_one_unblocked_rank(monkeypatch):
 
 def test_noise_page_rank_memory_is_bounded(monkeypatch):
     """A noise-filled page misses the glyph cache with tens of thousands of
-    distinct glyphs; ranking them in blocks keeps scan_grid's traced peak
-    far below the unblocked (g, N, 17) distance tensor (about 670 MB)."""
+    distinct glyphs; ranking them in blocks keeps the traced peak of CCL
+    plus the rank far below the unblocked (g, N, 17) distance tensor
+    (about 670 MB)."""
     import tracemalloc
 
     from newocr_spark.artifacts import get_model
@@ -261,12 +262,27 @@ def test_noise_page_rank_memory_is_bounded(monkeypatch):
     grid = np.random.default_rng(0).random((2000, 2000)) < 0.3
     tracemalloc.start()
     try:
-        scan.scan_grid(grid, m)
+        comps = connected_components(grid)
+        scan._candidates_for(comps, np.arange(len(comps)), m)
         _cur, peak = tracemalloc.get_traced_memory()
     finally:
         tracemalloc.stop()
     assert len(scan._CAND_CACHE) > 40_000
     assert peak < 256e6
+
+
+def test_components_in_no_line_are_not_ranked(monkeypatch):
+    """Only components that land in a line are featurized and ranked. A
+    noise grid inked down to its last row has no line (a run still open at
+    the bottom edge is never flushed, lines.py), so its scan adds nothing
+    to the glyph cache."""
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.kernel import scan
+
+    monkeypatch.setattr(scan, "_CAND_CACHE", type(scan._CAND_CACHE)())
+    grid = np.random.default_rng(0).random((300, 300)) < 0.3
+    assert scan.scan_grid(grid, get_model()) == []
+    assert len(scan._CAND_CACHE) == 0
 
 
 def test_glyph_cache_ranks_each_missed_key_once(monkeypatch):
