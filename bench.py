@@ -262,13 +262,14 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
         "noise": {"cycles": CYCLES, "flagged": flagged},
     }
     spark.stop()
-    result["vs_prev"] = _vs_prev(timings)
+    result["vs_prev"] = _vs_prev(timings, sf)
     return result
 
 
-def _load_prev() -> tuple:
-    """(round_n, sf, per-query timings) of the latest BENCH_r{N}.json, or
-    (None, None, {}) when no prior round file exists/parses."""
+def _load_prev(sf) -> tuple:
+    """(round_n, per-query timings) of the latest BENCH_r{N}.json recorded
+    at scale factor ``sf``, or (None, {}) when none exists/parses: timings
+    at another scale factor say nothing about a regression."""
     import glob
     import re
 
@@ -278,24 +279,24 @@ def _load_prev() -> tuple:
         m = re.search(r"BENCH_r(\d+)\.json$", p)
         if m:
             rounds.append((int(m.group(1)), p))
-    if not rounds:
-        return None, None, {}
-    n, path = max(rounds)
-    try:
-        with open(path) as f:
-            data = json.load(f)
+    for n, path in sorted(rounds, reverse=True):
+        try:
+            with open(path) as f:
+                data = json.load(f)
+        except Exception:
+            continue
         # the driver wraps the bench line under "parsed"
         inner = data.get("parsed") or data
-        return n, inner.get("sf", data.get("sf")), inner.get("queries") or {}
-    except Exception:
-        return None, None, {}
+        if inner.get("sf", data.get("sf")) == sf:
+            return n, inner.get("queries") or {}
+    return None, {}
 
 
-def _vs_prev(timings: dict[str, float]) -> dict:
-    """Per-query ratio vs the latest recorded BENCH_r{N}.json (cur/prev;
-    >1 slower, <1 faster) so round N+1's judge sees regressions at a
-    glance. Empty when no prior round file exists."""
-    n, sf, prev = _load_prev()
+def _vs_prev(timings: dict[str, float], sf) -> dict:
+    """Per-query ratio vs the latest BENCH_r{N}.json at the same scale
+    factor (cur/prev; >1 slower, <1 faster) so round N+1's judge sees
+    regressions at a glance. Empty when no such round file exists."""
+    n, prev = _load_prev(sf)
     if not prev:
         return {}
     out = {"prev_round": n, "prev_sf": sf, "ratios": {}}

@@ -26,7 +26,17 @@ letter, and the horizontal rules visit only their possible targets, on
 lines that have one. This is exact, not a heuristic: labels change only
 through a merge, and a merged letter (amount_of_merges > 0) is refused by
 every rule, as target and as partner, so no letter can join a piece class
-mid-mergence; positions come from the relation built before any merge.
+mid-mergence.
+
+Relations are index arrays: reading-order letter index → the y-ordered
+indices of the letters overlapping it in X, from the geometry before any
+merge. One `related` mask over the letter indices stands for the
+reference's removeAll over every relation list
+(DefaultMergenceManager.java:117): a vertical rule's removals clear it, and
+a vertical target sees only the still-related letters of its relation. A
+horizontal rule's sweep runs over the line lists it was given, so its
+removals leave `related` as it is: with a horizontal rule ordered before a
+vertical one, its merged-away letters stay in the vertical relations.
 
 Determinism note: the reference iterates ConcurrentHashMaps (nondeterministic
 order); we iterate letters in reading order (line insertion order, then
@@ -84,8 +94,8 @@ class _Ctx:
 
 # ---------------- the five rules ----------------
 # each: (ctx, target, context_list, pos) -> merged-away letters, or None;
-# pos is the index of target in context_list (the manager tracks it so the
-# reference's per-call indexOf scans are O(1) here)
+# pos is the index of target in context_list (the reference's rules look it
+# up with indexOf; the manager passes it)
 
 
 def _under_dot(ctx: _Ctx, target, data, pos):  # M2 — rules/UnderDotMergeRule.java:57-93
@@ -284,13 +294,17 @@ RULE_REGISTRY = {
 
 
 def vertical_relations(ctx: _Ctx, letters) -> dict:
-    """id(letter) → every letter overlapping it in X (incl. itself), by Y,
-    for just the letters that x-overlap a dot or horizontal-line letter —
-    no vertical rule can fire on any other target (module docstring).
+    """Reading-order index → indices of every letter overlapping it in X
+    (incl. itself), by Y, for just the letters that x-overlap a dot or
+    horizontal-line letter — no vertical rule can fire on any other target
+    (module docstring).
 
-    One vectorized interval test replaces the reference's parallel-stream
+    Interval tests on whole arrays replace the reference's parallel-stream
     O(n^2) object loop (DefaultMergenceManager.java:140-152); the stable
-    (y, reading-order) sort matches its Comparator.comparingInt(getY).
+    (y, reading-order) sort matches its Comparator.comparingInt(getY). A
+    letter is near a piece when the furthest end among the pieces starting
+    left of its end lies right of its start: a running max over the pieces
+    sorted by start, so memory stays linear in the letters.
     """
     n = len(letters)
     xs = np.fromiter((l.x for l in letters), np.int64, n)
@@ -299,83 +313,62 @@ def vertical_relations(ctx: _Ctx, letters) -> dict:
         ((l.letter, l.mod) in ctx.dot or (l.letter, l.mod) in ctx.hline for l in letters),
         bool, n,
     )
+    if not piece.any():
+        return {}
     pxs, pxe = xs[piece], xe[piece]
-    near = ((xe[:, None] > pxs[None, :]) & (pxe[None, :] > xs[:, None])).any(axis=1)
-    vertical = {}
-    if near.any():
-        ys = np.fromiter((l.y for l in letters), np.int64, n)
-        y_order = np.argsort(ys, kind="stable")
-        xs_o, xe_o = xs[y_order], xe[y_order]
-        for i in np.flatnonzero(near).tolist():
-            mask = (xe_o > xs[i]) & (xe[i] > xs_o)
-            vertical[id(letters[i])] = [letters[j] for j in y_order[mask].tolist()]
-    return vertical
+    by_start = np.argsort(pxs)
+    reach = np.maximum.accumulate(pxe[by_start])
+    k = np.searchsorted(pxs[by_start], xe)  # pieces starting left of each end
+    near = (k > 0) & (reach[k - 1] > xs)
+    ys = np.fromiter((l.y for l in letters), np.int64, n)
+    y_order = np.argsort(ys, kind="stable")
+    xs_o, xe_o = xs[y_order], xe[y_order]
+    return {
+        i: y_order[(xe_o > xs[i]) & (xe[i] > xs_o)]
+        for i in np.flatnonzero(near).tolist()
+    }
 
 
 def run_mergence(sorted_lines, model):
     """Run M1-M6 over [(y, [ImageLetter])]; returns the pruned line list."""
     ctx = _Ctx(model)
 
-    all_letters = [l for _y, line in sorted_lines for l in line]  # reading order
-    vertical = vertical_relations(ctx, all_letters)
-    vertical_targets = [l for l in all_letters if id(l) in vertical]
-
-    removed_global = set()
-
-    def positions_of(lst):
-        return {id(x): i for i, x in enumerate(lst)}
+    letters = [l for _y, line in sorted_lines for l in line]  # reading order
+    vertical = vertical_relations(ctx, letters)
+    related = np.ones(len(letters), dtype=bool)  # not removed by a vertical rule
+    removed = set()  # letters merged away by any rule
 
     for rule_name in model.config.merge_rules:
         rule_fn, line_targets = RULE_REGISTRY[rule_name]
         removing: list = []
-        removing_ids: set[int] = set()
         if line_targets is not None:
             # iterate lines in insertion order = reading order, visiting
             # only the targets the rule can fire on (module docstring)
             for _y, line in sorted_lines:
-                targets = line_targets(ctx, line)
-                if not targets:
-                    continue
-                pos_map = positions_of(line)
-                for letter in targets:
-                    lid = id(letter)
-                    if lid in removed_global or lid in removing_ids:
+                for letter in line_targets(ctx, line):
+                    if letter in removed:
                         continue
-                    result = rule_fn(ctx, letter, line, pos_map[lid])
+                    result = rule_fn(ctx, letter, line, line.index(letter))
                     if result:
-                        for r in result:
-                            removing.append(r)
-                            removing_ids.add(id(r))
                         # rules only return letters of the list they were
-                        # given, and a letter appears only in its own line
-                        # list, so the removeAll sweep
-                        # (DefaultMergenceManager.java:117) only touches it
-                        line[:] = [x for x in line if id(x) not in removing_ids]
-                        pos_map = positions_of(line)
+                        # given, so the removeAll sweep only touches it
+                        for r in result:
+                            line.remove(r)
+                        removing += result
+                        removed.update(result)
         else:
-            for letter in vertical_targets:
-                lid = id(letter)
-                if lid in removed_global or lid in removing_ids:
+            for i, rel in vertical.items():
+                letter = letters[i]
+                if letter in removed:
                     continue
-                data = vertical[lid]
-                result = rule_fn(ctx, letter, data, data.index(letter))
+                rel = rel[related[rel]].tolist()
+                data = [letters[j] for j in rel]
+                result = rule_fn(ctx, letter, data, rel.index(i))
                 if result:
-                    # x-overlap is symmetric: a removed letter appears only
-                    # in the lists of the letters in its own list, so the
-                    # removeAll sweep only needs to touch those
-                    affected: set[int] = set()
                     for r in result:
-                        removing.append(r)
-                        removing_ids.add(id(r))
-                        affected.update(id(o) for o in vertical.get(id(r), ()))
-                    for aid in affected:
-                        lst = vertical.get(aid)
-                        if lst is not None:
-                            lst[:] = [x for x in lst if id(x) not in removing_ids]
-        # drop as relation keys from both orientations + from the line lists
-        for r in removing:
-            removed_global.add(id(r))
-            vertical.pop(id(r), None)
+                        related[rel[data.index(r)]] = False
+                    removing += result
+                    removed.update(result)
         # removeFromSorted: only drops a line when the removal happened here
         for r in removing:
             for entry in list(sorted_lines):

@@ -305,21 +305,3 @@ def segment_blocks(root: Element) -> list[Block]:
     flush()
     return blocks
 
-
-def page_title(root: Element) -> str:
-    """<title> text, if present (head is skipped by the tree builder, so
-    look for the first <h1> instead; fall back to empty)."""
-    result: list[str] = []
-
-    def find(el: Element):
-        for child in el.children:
-            if isinstance(child, str):
-                continue
-            if child.tag == "h1" and not result:
-                texts = [c for c in child.children if isinstance(c, str)]
-                result.append(_normalize(texts))
-                return
-            find(child)
-
-    find(root)
-    return result[0] if result else ""

@@ -43,3 +43,24 @@ def test_main_prints_one_line_with_trimmed_vs_prev(monkeypatch, capsys, tmp_path
 
     with open(tmp_path / "BENCH_last_run.json") as f:
         assert json.load(f) == result
+
+
+def test_vs_prev_compares_only_at_the_same_scale_factor(monkeypatch, tmp_path):
+    """Timings at another scale factor give no ratios; the newest round
+    recorded at this run's scale factor gives them, even when a newer
+    round ran at another one."""
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+
+    def record(n, sf, seconds):
+        line = {"sf": sf, "queries": {"q1": seconds, "q2": 2 * seconds}}
+        with open(tmp_path / f"BENCH_r{n:02d}.json", "w") as f:
+            json.dump({"n": n, "sf": sf, "parsed": line}, f)
+
+    record(5, 0.1, 8.0)
+    assert bench._vs_prev({"q1": 2.0, "q2": 2.0}, 0.001) == {}
+
+    record(4, 0.001, 1.0)
+    record(3, 0.001, 4.0)
+    assert bench._vs_prev({"q1": 2.0, "q2": 2.0}, 0.001) == {
+        "prev_round": 4, "prev_sf": 0.001, "ratios": {"q1": 2.0, "q2": 1.0},
+    }

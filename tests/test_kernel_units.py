@@ -271,6 +271,31 @@ def test_noise_page_rank_memory_is_bounded(monkeypatch):
     assert peak < 256e6
 
 
+def test_long_line_mergence_memory_is_bounded():
+    """A line of 20,000 letters, every other one a dot, runs mergence in
+    memory linear in its letters: the piece test takes a running max over
+    the dots sorted by start instead of a letters × dots matrix (about
+    200 MB per temporary here)."""
+    import tracemalloc
+
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.kernel.mergence import run_mergence
+    from newocr_spark.kernel.scan import ImageLetter
+
+    line = [
+        ImageLetter(".", 0, 3 * k, 8, 2, 2) if k % 2 else ImageLetter("a", 0, 3 * k, 0, 2, 10)
+        for k in range(20_000)
+    ]
+    tracemalloc.start()
+    try:
+        out = run_mergence([(5, line)], get_model())
+        _cur, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert len(out) == 1 and len(out[0][1]) == 20_000
+    assert peak < 32 * 2**20
+
+
 def test_components_in_no_line_are_not_ranked(monkeypatch):
     """Only components that land in a line are featurized and ranked. A
     noise grid inked down to its last row has no line (a run still open at

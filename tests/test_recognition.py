@@ -49,7 +49,7 @@ def test_vertical_relations_only_piece_neighbourhoods(font_model, monkeypatch):
         letters = [l for _y, line in sorted_lines for l in line]
         seen["letters"] = [(l.letter, l.mod) for l in letters]
         rel = mergence.vertical_relations(ctx, letters)
-        seen["related"] = [(l.letter, l.mod) for l in letters if id(l) in rel]
+        seen["related"] = [(l.letter, l.mod) for i, l in enumerate(letters) if i in rel]
         return real(sorted_lines, model)
 
     monkeypatch.setattr(scan, "run_mergence", spy)
