@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..analytics.dedup import _attach_broadcasts
 from ..model import FontModel
 
 OCR_OUTPUT_SCHEMA = (
@@ -64,7 +65,9 @@ def make_ocr_udf(broadcast_model):
         from ..kernel.grid import binarize
         from ..kernel.metrics import font_size_of
         from ..kernel.scan import render_text, scan_grid
+        from .session import skip_unchanged_zip_rescans
 
+        skip_unchanged_zip_rescans()
         model: FontModel = broadcast_model.value
         for pdf in batches:
             n = len(pdf)
@@ -157,10 +160,13 @@ def extract_spans(
 
     The whole slice's media-span metadata is broadcast; a corpus whose
     metadata outgrows the broadcast budget goes through ExtractRunner
-    (pipeline/state.py), which bounds it per bucket group."""
+    (pipeline/state.py), which bounds it per bucket group. The model
+    broadcast rides on the frame: ``release_broadcasts`` frees it after
+    the last action (a stream does so per micro-batch)."""
     text_spans, meta = _split(documents)
-    ocr_spans = _ocr(media, meta, spark.sparkContext.broadcast(model))
-    return _assemble(text_spans, ocr_spans, meta, media)
+    bmodel = spark.sparkContext.broadcast(model)
+    ocr_spans = _ocr(media, meta, bmodel)
+    return _attach_broadcasts(_assemble(text_spans, ocr_spans, meta, media), bmodel)
 
 
 def assemble_documents(extracted: DataFrame) -> DataFrame:

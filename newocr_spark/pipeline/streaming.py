@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..analytics.dedup import release_broadcasts
 from ..model import FontModel
 from .extract import extract_spans
 
@@ -82,6 +83,7 @@ def stream_extract(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         extracted = extract_spans(spark, batch_df, media, model)
         _idempotent_append(extracted, output_path, batch_id)
+        release_broadcasts(extracted)
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_path
@@ -118,6 +120,7 @@ def stream_web_extract(
         docs = html_to_documents(batch_df, html_col=html_col)
         extracted = extract_spans(spark, docs, media, model)
         _idempotent_append(extracted, output_path, batch_id)
+        release_broadcasts(extracted)
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_path

@@ -35,3 +35,34 @@ def test_ngram_bitmap_broadcasts_released(spark):
     assert release_broadcasts(df) == 1
     with pytest.raises(Exception):
         df.count()
+
+
+def test_stream_extract_releases_model_broadcasts(spark, font_model, tmp_path):
+    """Each micro-batch's extract_spans broadcasts the font model; the
+    stream frees it once the batch is written, so a long-running stream
+    keeps no broadcast pickle per batch in the driver's temp dir."""
+    import os
+    import shutil
+
+    from newocr_spark.fixtures import synth_fixture
+    from newocr_spark.pipeline.streaming import stream_extract
+
+    d = str(tmp_path / "fx")
+    synth_fixture(d, n_docs=8, seed=5, model=font_model, verify=False)
+    docs = spark.read.parquet(f"{d}/documents.parquet")
+    docs_dir = str(tmp_path / "docs_stream")
+    os.makedirs(docs_dir)
+    for i, cond in enumerate(("doc_id < 'doc-000004'", "doc_id >= 'doc-000004'")):
+        docs.filter(cond).coalesce(1).write.parquet(str(tmp_path / f"h{i}"))
+    media = spark.read.parquet(f"{d}/media.parquet")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    temp_dir = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp_dir))
+
+    for i in range(2):  # two trigger-once runs on one checkpoint: two micro-batches
+        src = [f for f in os.listdir(str(tmp_path / f"h{i}")) if f.endswith(".parquet")][0]
+        shutil.copy(str(tmp_path / f"h{i}" / src), f"{docs_dir}/part-{i}.parquet")
+        stream_extract(spark, docs_dir, media, font_model, out, ckpt).awaitTermination(120)
+
+    assert spark.read.parquet(out).select("batch_id").distinct().count() == 2
+    assert len(os.listdir(temp_dir)) == before

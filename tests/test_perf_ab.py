@@ -1,0 +1,46 @@
+"""The paired A/B summary of scripts/perf_ab.py, on hand-made pairs."""
+
+import pytest
+
+from scripts.perf_ab import summarize
+
+BOUNDS = {"docs_per_s": ("higher", 0.25), "setup_s": ("lower", 0.25)}
+
+
+def _pairs(parent, change, name="docs_per_s"):
+    return [{"parent": {name: p}, "change": {name: c}} for p, c in zip(parent, change)]
+
+
+def test_medians_iqr_ratio_and_won_pairs():
+    s = summarize(_pairs([100, 200, 120, 110], [110, 180, 150, 121]), BOUNDS)["docs_per_s"]
+    assert s["parent_median"] == 115 and s["change_median"] == 135.5
+    # inclusive quartiles of 100, 110, 120, 200: 107.5 and 140
+    assert s["parent_iqr"] == pytest.approx(32.5)
+    # ratios 1.1, 0.9, 1.25, 1.1
+    assert s["ratio_median"] == pytest.approx(1.1)
+    assert s["won"] == 3 and s["pairs"] == 4
+    assert not s["worse_past_bound"]
+
+
+def test_worse_past_bound_follows_the_direction():
+    down = summarize(_pairs([100, 100, 100], [74, 74, 80]), BOUNDS)["docs_per_s"]
+    assert down["worse_past_bound"] and down["won"] == 0
+    inside = summarize(_pairs([100, 100, 100], [76, 76, 76]), BOUNDS)["docs_per_s"]
+    assert not inside["worse_past_bound"]
+    slower_setup = summarize(_pairs([4, 4, 4], [5.1, 5.1, 5.1], "setup_s"), BOUNDS)["setup_s"]
+    assert slower_setup["worse_past_bound"] and slower_setup["won"] == 0
+    faster_setup = summarize(_pairs([4, 4, 4], [3, 3, 3], "setup_s"), BOUNDS)["setup_s"]
+    assert not faster_setup["worse_past_bound"] and faster_setup["won"] == 3
+
+
+def test_unbounded_metric_is_reported_but_never_judged():
+    s = summarize(_pairs([1.0, 2.0], [9.0, 9.0], "pass_s"), BOUNDS)["pass_s"]
+    assert s["better"] is None and s["won"] is None
+    assert not s["worse_past_bound"]
+    assert s["parent_iqr"] == pytest.approx(0.5) and s["change_iqr"] == 0
+
+
+def test_only_metrics_present_on_both_sides_of_every_pair():
+    pairs = [{"parent": {"a": 1, "b": 2}, "change": {"a": 1}},
+             {"parent": {"a": 1}, "change": {"a": 2, "c": 3}}]
+    assert list(summarize(pairs, {})) == ["a"]
