@@ -55,7 +55,8 @@ def summarize(pairs: list[dict], bounds: dict[str, tuple[str, float]]) -> dict:
         change = [p["change"][name] for p in pairs]
         better, bound = bounds.get(name, (None, None))
         ratios = [c / p if p else float("nan") for p, c in zip(parent, change)]
-        won = sum((c > p) if better == "higher" else (c < p) for p, c in zip(parent, change))
+        won = sum((c > p) if better == "higher" else (c < p)
+                  for p, c in zip(parent, change)) if better else None
         pm, cm = statistics.median(parent), statistics.median(change)
         if better == "higher":
             worse = cm < pm * (1 - bound)
@@ -67,7 +68,7 @@ def summarize(pairs: list[dict], bounds: dict[str, tuple[str, float]]) -> dict:
             "parent_median": pm, "parent_iqr": _iqr(parent),
             "change_median": cm, "change_iqr": _iqr(change),
             "ratio_median": statistics.median(ratios),
-            "won": won if better else None, "pairs": len(pairs),
+            "won": won, "pairs": len(pairs),
             "better": better, "bound": bound, "worse_past_bound": worse,
         }
     return out
