@@ -44,6 +44,7 @@ def main() -> None:
     from newocr_spark.pipeline.session import build_session
     from newocr_spark.pipeline.sinks import ParquetStateStore
     from newocr_spark.pipeline.state import ExtractRunner
+    from newocr_spark.sources import DOCUMENTS_SCHEMA
 
     spark = build_session(app="newocr-extract")
     model = (
@@ -53,8 +54,9 @@ def main() -> None:
         spark, model, args.output, ParquetStateStore(spark, args.state),
         n_buckets=args.buckets, group_size=args.group_size,
     )
-    docs = spark.read.parquet(args.documents)
-    media = spark.read.parquet(args.media)
+    # declared schemas: no schema-inference job per input
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(args.documents)
+    media = spark.read.schema("media_ref string, png binary").parquet(args.media)
     stats = runner.run(docs, media, input_snapshot=args.snapshot, run_id=args.run_id)
     print(json.dumps(stats, sort_keys=True))
 

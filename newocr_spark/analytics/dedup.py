@@ -79,6 +79,31 @@ def _tokens(col):
     return F.split(F.trim(col), r"\s+")
 
 
+def _windows(toks, n: int):
+    """The n-token window strings of a token-array column (empty when it
+    holds fewer than n tokens): the shingles of every minhash path, batch
+    and streaming."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _minhash(i: int, shingle):
+    """Minhash row i's salted 60-bit hash of a shingle column."""
+    return _h60(F.concat_ws(":", F.lit(str(i)), shingle))
+
+
+def _band_sig(b: int):
+    """Band b's signature: md5 over its rows' mh{i} columns."""
+    rows_per_band = N_MINHASH // N_BANDS
+    rows = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
+    return F.md5(F.concat_ws(",", *[c.cast("string") for c in rows]))
+
+
 def _shingles(df: DataFrame, n: int = 2) -> DataFrame:
     """doc_id → distinct n-gram token shingles.
 
@@ -96,16 +121,9 @@ def _shingles(df: DataFrame, n: int = 2) -> DataFrame:
     slice re-ran the regex split — O(tokens^2) regex work per doc (measured
     5x on the shingle stage)."""
     toked = df.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    toks = F.col("toks")
-    windows = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        toked.select("doc_id", F.explode(windows).alias("shingle")).distinct()
+        toked.select("doc_id", F.explode(_windows(F.col("toks"), n)).alias("shingle"))
+        .distinct()
     )
 
 
@@ -470,21 +488,9 @@ def _rep_candidates(
 def _band_rows(sigs: DataFrame) -> DataFrame:
     """Explode N_MINHASH signature columns into (doc_id, band, sig) rows —
     one pass, one Generate; no per-band re-evaluation of the pipeline."""
-    rows_per_band = N_MINHASH // N_BANDS
     band_structs = F.array(
         *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * rows_per_band + r}").cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("sig"),
-            )
+            F.struct(F.lit(b).alias("band"), _band_sig(b).alias("sig"))
             for b in range(N_BANDS)
         ]
     )
@@ -497,7 +503,7 @@ def _signatures_from(sh: DataFrame) -> DataFrame:
     """(doc_id, shingle) → N_MINHASH minhash values (min over shingles of
     salted h60)."""
     aggs = [
-        F.min(_h60(F.concat_ws(":", F.lit(str(i)), F.col("shingle")))).alias(f"mh{i}")
+        F.min(_minhash(i, F.col("shingle"))).alias(f"mh{i}")
         for i in range(N_MINHASH)
     ]
     return sh.groupBy("doc_id").agg(*aggs)

@@ -143,11 +143,13 @@ class SqliteStateStore(StateStore):
     commits impossible at the storage level ("WHEN NOT MATCHED THEN
     INSERT"), where the parquet log merely tolerates them."""
 
-    _COLS = (
-        "run_id", "partition_id", "doc_id_min", "doc_id_max",
-        "input_snapshot", "docs_done", "glyph_count", "error_count",
-        "wall_ms", "attempt", "committed_at",
-    )
+    # the table's columns are STATE_SCHEMA's fields; timestamps are stored
+    # as ISO-8601 text
+    _SQL_TYPES = {
+        "string": "TEXT", "int": "INTEGER", "long": "INTEGER", "timestamp": "TEXT",
+    }
+    _FIELDS = [f.split() for f in STATE_SCHEMA.split(",")]
+    _COLS = tuple(name for name, _type in _FIELDS)
 
     def __init__(self, spark: SparkSession, db_path: str) -> None:
         self.spark = spark
@@ -157,12 +159,10 @@ class SqliteStateStore(StateStore):
         import sqlite3
 
         conn = sqlite3.connect(self.db_path)
+        cols = ", ".join(f"{name} {self._SQL_TYPES[t]}" for name, t in self._FIELDS)
         conn.execute(
-            """CREATE TABLE IF NOT EXISTS state (
-                 run_id TEXT, partition_id INTEGER,
-                 doc_id_min TEXT, doc_id_max TEXT, input_snapshot TEXT,
-                 docs_done INTEGER, glyph_count INTEGER, error_count INTEGER,
-                 wall_ms INTEGER, attempt INTEGER, committed_at TEXT,
+            f"""CREATE TABLE IF NOT EXISTS state (
+                 {cols},
                  UNIQUE (input_snapshot, partition_id) ON CONFLICT IGNORE
                )"""
         )
@@ -182,9 +182,9 @@ class SqliteStateStore(StateStore):
             ).fetchall()
         if not rows:
             return self.spark.createDataFrame([], STATE_SCHEMA)
-        ts = len(self._COLS) - 1  # committed_at is last
+        ts = self._COLS.index("committed_at")
         recs = [
-            r[:ts] + (datetime.datetime.fromisoformat(r[ts]),) for r in rows
+            r[:ts] + (datetime.datetime.fromisoformat(r[ts]),) + r[ts + 1:] for r in rows
         ]
         return self.spark.createDataFrame(recs, STATE_SCHEMA)
 

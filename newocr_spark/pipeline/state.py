@@ -113,79 +113,83 @@ class ExtractRunner:
 
         text_spans, meta = extract._split(documents)
         bmodel = self.spark.sparkContext.broadcast(self.model)
-
-        stats = {"groups_run": 0, "buckets_done": len(done)}
-        for group in groups:
-            t0 = time.time()
-            # media-keyed bucket filter on both join sides: only this
-            # group's image bytes are read (a partition-pruned scan when
-            # media is stored bucketed) and only its metadata broadcasts
-            in_group = self._bucket_of("media_ref").isin(group)
-            ocr = (
-                extract._ocr(media.filter(in_group), meta.filter(in_group), bmodel)
-                .withColumn("bucket", self._bucket_of("media_ref"))
-                .withColumn("snapshot", F.lit(snap))
-            )
-            # idempotent per-bucket intermediate: replaces exactly this
-            # group's bucket partitions (dynamic overwrite / Iceberg
-            # overwritePartitions, per the sink)
-            self.ocr_sink.overwrite_partitions(ocr, "bucket")
-            wall_ms = int((time.time() - t0) * 1000)
-            # metrics from the WRITTEN rows — never re-execute the OCR plan;
-            # explicit schema so an all-empty group (no data files yet)
-            # reads as an empty frame instead of a schema-inference error
-            metrics = (
-                self._read_intermediate()
-                .filter((F.col("snapshot") == snap) & F.col("bucket").isin(group))
-                .groupBy("bucket")
-                .agg(
-                    F.countDistinct("doc_id").alias("docs_done"),
-                    F.sum("glyph_count").alias("glyph_count"),
-                    F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
-                        "error_count"
-                    ),
-                    F.min("doc_id").alias("doc_id_min"),
-                    F.max("doc_id").alias("doc_id_max"),
+        try:
+            stats = {"groups_run": 0, "buckets_done": len(done)}
+            for group in groups:
+                t0 = time.time()
+                # media-keyed bucket filter on both join sides: only this
+                # group's image bytes are read (a partition-pruned scan when
+                # media is stored bucketed) and only its metadata broadcasts
+                in_group = self._bucket_of("media_ref").isin(group)
+                ocr = (
+                    extract._ocr(media.filter(in_group), meta.filter(in_group), bmodel)
+                    .withColumn("bucket", self._bucket_of("media_ref"))
+                    .withColumn("snapshot", F.lit(snap))
                 )
-                .collect()
-            )
-            by_bucket = {r.bucket: r.asDict() for r in metrics}
-            now = datetime.datetime.now(datetime.timezone.utc)
-            self.state.append([
-                {
-                    "run_id": run_id, "partition_id": int(b), "input_snapshot": snap,
-                    "doc_id_min": None, "doc_id_max": None,
-                    "docs_done": 0, "glyph_count": 0, "error_count": 0,
-                    **by_bucket.get(b, {}),
-                    "wall_ms": wall_ms, "attempt": attempt, "committed_at": now,
-                }
-                for b in group
-            ])
-            stats["groups_run"] += 1
-            stats["buckets_done"] += len(group)
-            if self.fail_after_groups is not None and stats["groups_run"] >= self.fail_after_groups:
-                raise RuntimeError(
-                    f"injected failure after {stats['groups_run']} group(s) (test hook)"
+                # idempotent per-bucket intermediate: replaces exactly this
+                # group's bucket partitions (dynamic overwrite / Iceberg
+                # overwritePartitions, per the sink)
+                self.ocr_sink.overwrite_partitions(ocr, "bucket")
+                wall_ms = int((time.time() - t0) * 1000)
+                # metrics from the WRITTEN rows — never re-execute the OCR plan;
+                # explicit schema so an all-empty group (no data files yet)
+                # reads as an empty frame instead of a schema-inference error
+                metrics = (
+                    self._read_intermediate()
+                    .filter((F.col("snapshot") == snap) & F.col("bucket").isin(group))
+                    .groupBy("bucket")
+                    .agg(
+                        F.countDistinct("doc_id").alias("docs_done"),
+                        F.sum("glyph_count").alias("glyph_count"),
+                        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
+                            "error_count"
+                        ),
+                        F.min("doc_id").alias("doc_id_min"),
+                        F.max("doc_id").alias("doc_id_max"),
+                    )
+                    .collect()
                 )
+                by_bucket = {r.bucket: r.asDict() for r in metrics}
+                now = datetime.datetime.now(datetime.timezone.utc)
+                self.state.append([
+                    {
+                        "run_id": run_id, "partition_id": int(b), "input_snapshot": snap,
+                        "doc_id_min": None, "doc_id_max": None,
+                        "docs_done": 0, "glyph_count": 0, "error_count": 0,
+                        **by_bucket.get(b, {}),
+                        "wall_ms": wall_ms, "attempt": attempt, "committed_at": now,
+                    }
+                    for b in group
+                ])
+                stats["groups_run"] += 1
+                stats["buckets_done"] += len(group)
+                if self.fail_after_groups is not None and stats["groups_run"] >= self.fail_after_groups:
+                    raise RuntimeError(
+                        f"injected failure after {stats['groups_run']} group(s) (test hook)"
+                    )
 
-        # ---- assembly stage (cheap, idempotent): runs once all buckets are
-        # committed, over the intermediate (never prior-snapshot rows)
-        if stats["buckets_done"] >= self.n_buckets:
-            ocr_all = (
-                self._read_intermediate()
-                .filter(F.col("snapshot") == snap)
-                .drop("bucket", "snapshot")
-            )
-            final = extract._assemble(text_spans, ocr_all, meta, media).withColumn(
-                "bucket", self._bucket_of("doc_id")
-            )
-            # FULL overwrite: the assembly is the one stage allowed to
-            # rewrite everything — a dynamic/partition overwrite of a
-            # shrunken snapshot would leave prior-run output partitions in
-            # buckets this run doesn't touch. The runner's one exchange
-            # gathers each bucket, so no union partition writes a file per bucket
-            self.out_sink.overwrite_all(final.repartition("bucket"), "bucket")
-        return stats
+            # ---- assembly stage (cheap, idempotent): runs once all buckets are
+            # committed, over the intermediate (never prior-snapshot rows)
+            if stats["buckets_done"] >= self.n_buckets:
+                ocr_all = (
+                    self._read_intermediate()
+                    .filter(F.col("snapshot") == snap)
+                    .drop("bucket", "snapshot")
+                )
+                final = extract._assemble(text_spans, ocr_all, meta, media).withColumn(
+                    "bucket", self._bucket_of("doc_id")
+                )
+                # FULL overwrite: the assembly is the one stage allowed to
+                # rewrite everything — a dynamic/partition overwrite of a
+                # shrunken snapshot would leave prior-run output partitions in
+                # buckets this run doesn't touch. The runner's one exchange
+                # gathers each bucket, so no union partition writes a file per bucket
+                self.out_sink.overwrite_all(final.repartition("bucket"), "bucket")
+            return stats
+        finally:
+            # also on the injected-failure path: a long-lived session that
+            # runs many backfills keeps no model pickle per run
+            bmodel.destroy()
 
     def read_output(self) -> DataFrame:
         return self.out_sink.read()

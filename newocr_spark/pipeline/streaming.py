@@ -7,15 +7,77 @@ directory → ``foreachBatch`` → the same ``extract_spans`` plan per
 micro-batch, with Spark's own checkpointLocation providing exactly-once
 file-source progress (complementing the doc-bucket state table used for
 batch backfills, pipeline/state.py).
+
+Every stream here reuses the batch operators it mirrors instead of a copy
+of them, and shares its wiring:
+
+  * ``_source`` is the one file source (schema read from the files already
+    there unless given), ``_start`` the one trigger policy and
+    ``_append_parquet`` the one parquet sink;
+  * ``_extract_stream`` is the one micro-batch body of ``stream_extract``
+    and ``stream_web_extract``; the web stream maps ``html_to_documents``
+    over the stream first;
+  * ``stream_dedup_neardup`` keys on dedup.py's ``_windows``, ``_minhash``
+    and ``_band_sig``, the expressions the batch LSH path runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..analytics.dedup import release_broadcasts
+from ..analytics.dedup import (
+    N_BANDS, N_MINHASH, _band_sig, _minhash, _tokens, _windows, release_broadcasts,
+)
 from ..model import FontModel
 from .extract import extract_spans
+
+
+def _source(spark: SparkSession, path: str, schema, **options) -> DataFrame:
+    """Streaming parquet source over ``path``; without a ``schema`` it is
+    read from the files already there."""
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    return spark.readStream.schema(schema).options(**options).parquet(path)
+
+
+def _start(writer, trigger_once: bool):
+    """Start a stream writer; ``trigger_once`` drains the input available
+    now and stops."""
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _append_parquet(
+    stream: DataFrame, output_path: str, checkpoint_path: str, trigger_once: bool
+):
+    """Start ``stream`` appending its rows as parquet under ``output_path``."""
+    writer = (
+        stream.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+    )
+    return _start(writer, trigger_once)
+
+
+def _extract_stream(
+    spark: SparkSession, docs: DataFrame, media: DataFrame, model: FontModel,
+    output_path: str, checkpoint_path: str, trigger_once: bool,
+):
+    """Streaming documents frame → ``extract_spans`` per micro-batch,
+    appended replay-safely; each batch's model broadcast is released once
+    the batch is written."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        extracted = extract_spans(spark, batch_df, media, model)
+        _idempotent_append(extracted, output_path, batch_id)
+        release_broadcasts(extracted)
+
+    writer = docs.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_path
+    )
+    return _start(writer, trigger_once)
 
 
 def _epoch_ms_fn(session_tz: str):
@@ -76,21 +138,10 @@ def stream_extract(
     trigger_once=True this drains available input and stops — the pattern
     for incremental backfill jobs.
     """
-    if schema is None:
-        schema = spark.read.parquet(documents_path).schema
-    stream = spark.readStream.schema(schema).parquet(documents_path)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = extract_spans(spark, batch_df, media, model)
-        _idempotent_append(extracted, output_path, batch_id)
-        release_broadcasts(extracted)
-
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
+    return _extract_stream(
+        spark, _source(spark, documents_path, schema), media, model,
+        output_path, checkpoint_path, trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_web_extract(
@@ -112,22 +163,10 @@ def stream_web_extract(
     streaming wrapper adds no state beyond the source progress log."""
     from ..web.extract import html_to_documents
 
-    if schema is None:
-        schema = spark.read.parquet(corpus_path).schema
-    stream = spark.readStream.schema(schema).parquet(corpus_path)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        docs = html_to_documents(batch_df, html_col=html_col)
-        extracted = extract_spans(spark, docs, media, model)
-        _idempotent_append(extracted, output_path, batch_id)
-        release_broadcasts(extracted)
-
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
+    docs = html_to_documents(_source(spark, corpus_path, schema), html_col=html_col)
+    return _extract_stream(
+        spark, docs, media, model, output_path, checkpoint_path, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_metrics(
@@ -151,9 +190,7 @@ def stream_metrics(
     a window emits once, when the watermark passes its end."""
     from pyspark.sql import functions as F
 
-    if schema is None:
-        schema = spark.read.parquet(extracted_path).schema
-    stream = spark.readStream.schema(schema).parquet(extracted_path)
+    stream = _source(spark, extracted_path, schema)
     agg = (
         stream.withWatermark("committed_at", watermark_delay)
         .groupBy(F.window("committed_at", window_duration).alias("win"))
@@ -171,15 +208,7 @@ def stream_metrics(
             "spans", "docs", "glyphs", "errors",
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _append_parquet(agg, output_path, checkpoint_path, trigger_once)
 
 
 def stream_assemble(
@@ -218,8 +247,6 @@ def stream_assemble(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if schema is None:
-        schema = spark.read.parquet(spans_path).schema
     # Arrow renders committed_at as a tz-NAIVE pandas timestamp in the
     # SESSION timezone, while getCurrentWatermarkMs/setTimeoutTimestamp are
     # UTC epoch-ms; .timestamp() on a naive value assumes UTC, so on a
@@ -228,9 +255,8 @@ def stream_assemble(
     # gap). Localize to the session tz before epoch conversion.
     session_tz = spark.conf.get("spark.sql.session.timeZone")
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # one file = one micro-batch
-        .parquet(spans_path)
+        # one file = one micro-batch
+        _source(spark, spans_path, schema, maxFilesPerTrigger=1)
         # a NULL event time would reach the stateful operator and kill
         # the whole query (NaT has no epoch); drop such rows here — one
         # bad upstream row must not poison continuous ingestion
@@ -293,15 +319,7 @@ def stream_assemble(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        assembled.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _append_parquet(assembled, output_path, checkpoint_path, trigger_once)
 
 
 def stream_dedup_neardup(
@@ -321,9 +339,10 @@ def stream_dedup_neardup(
     — band-signature equality as the streaming dedup key.
 
     Per arriving document the MinHash signature is computed NARROWLY
-    (per-row `transform`/`array_min` over the shingle array — no shuffle,
-    no groupBy; same salted-h60/banding scheme as the batch path, so the
-    streaming key space is bit-identical to `dedup._band_rows`). Each doc
+    (per-row `array_min` over the salted hashes of its shingle array — no
+    shuffle, no groupBy). The shingle window, salted hash and band
+    signature are dedup.py's own `_windows`, `_minhash` and `_band_sig`, so
+    the streaming key space is the batch `_band_rows` key space. Each doc
     explodes into its N_BANDS (band, sig) keys; a doc is suppressed iff ANY
     band signature was claimed by an earlier doc within the horizon — the
     exact LSH candidate condition, evaluated incrementally.
@@ -351,25 +370,16 @@ def stream_dedup_neardup(
     keep-iff-all-bands-novel vote runs batch-locally in `foreachBatch`:
     a doc's band rows are exploded from one source row, so they always
     share a micro-batch. Emits (doc_id, text, ts) for kept docs.
-
-    Cites: banding layout dedup.py:_band_rows; salted minhash
-    dedup.py:_signatures_from; shingle window dedup.py:_shingles.
     """
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..analytics.dedup import N_BANDS, N_MINHASH
-
-    if schema is None:
-        schema = spark.read.parquet(documents_path).schema
     horizon_ms = int(pd.Timedelta(horizon).total_seconds() * 1000)
     session_tz = spark.conf.get("spark.sql.session.timeZone")
-    rows_per_band = N_MINHASH // N_BANDS
 
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(documents_path)
+        _source(spark, documents_path, schema)
         # NULL event time would NaT-crash the stateful operator
         .filter(f"{ts_col} IS NOT NULL")
     )
@@ -377,32 +387,15 @@ def stream_dedup_neardup(
     # narrow per-row shingling (dedup._shingles semantics, sans distinct —
     # min over a multiset equals min over its set). Project toks/shingles
     # into columns first: referencing the split() expression inside the
-    # lambda defeats CSE across the lambda boundary (see dedup.py:93-97).
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    shingled = stream.withColumn("toks", toks).withColumn(
-        "shingles",
-        F.when(
-            F.size("toks") >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - n),
-                lambda i: F.array_join(F.slice(F.col("toks"), i + 1, n), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
+    # lambda defeats CSE across the lambda boundary (see dedup._shingles).
+    shingled = stream.withColumn("toks", _tokens(F.col("text"))).withColumn(
+        "shingles", _windows(F.col("toks"), n)
     )
 
     def _mh(i: int):
-        # salted 60-bit hash, min over shingles — dedup._h60 inlined so the
-        # whole signature stays in one whole-stage-codegen projection
-        return F.array_min(
-            F.transform(
-                F.col("shingles"),
-                lambda s: F.conv(
-                    F.substring(F.md5(F.concat_ws(":", F.lit(str(i)), s)), 1, 15),
-                    16,
-                    10,
-                ).cast("long"),
-            )
-        )
+        # a closure per row i: F.transform reads a two-parameter lambda
+        # (say one with an i=i default) as (element, index)
+        return F.array_min(F.transform(F.col("shingles"), lambda s: _minhash(i, s)))
 
     sigs = shingled.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -414,24 +407,14 @@ def stream_dedup_neardup(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                F.when(
-                    F.col("mh0").isNotNull(),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"mh{b * rows_per_band + r}").cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    ),
-                ).otherwise(
+                F.when(F.col("mh0").isNotNull(), _band_sig(b)).otherwise(
                     # sub-n-token docs have no signature and never pair
-                    # (dedup.py:478-479): key on (doc_id, ts) so the key
-                    # never collides — not even with the SAME doc_id
-                    # re-ingested later, which the batch path would also
-                    # keep (doc_id alone would self-suppress a re-crawl
-                    # of a short doc inside the horizon)
+                    # (no shingle, so no _signatures_from row): key on
+                    # (doc_id, ts) so the key never collides — not even
+                    # with the SAME doc_id re-ingested later, which the
+                    # batch path would also keep (doc_id alone would
+                    # self-suppress a re-crawl of a short doc inside the
+                    # horizon)
                     F.concat_ws(
                         ":", F.lit("uniq"), F.col("doc_id"),
                         F.col("ts").cast("long").cast("string"),
@@ -527,9 +510,7 @@ def stream_dedup_neardup(
         .foreachBatch(emit_batch)
         .option("checkpointLocation", checkpoint_path)
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(writer, trigger_once)
 
 
 def stream_dedup_exact(
@@ -558,20 +539,9 @@ def stream_dedup_exact(
     (ingestion sinks stamp one)."""
     from pyspark.sql import functions as F
 
-    if schema is None:
-        schema = spark.read.parquet(documents_path).schema
-    stream = spark.readStream.schema(schema).parquet(documents_path)
     deduped = (
-        stream.withColumn("text_hash", F.md5("text"))
+        _source(spark, documents_path, schema).withColumn("text_hash", F.md5("text"))
         .withWatermark(ts_col, watermark_delay)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
-    writer = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _append_parquet(deduped, output_path, checkpoint_path, trigger_once)

@@ -17,6 +17,13 @@ anti-join; spans carry their split-time seq, so no per-doc window). Every query 
 is oracle-checked: the fixtures are pure functions of (doc_id, text), so
 the expected output — paragraph chunking, span offsets, page counts —
 is reconstructed in DuckDB SQL over the same documents table.
+
+Each page body exists once. ``html_to_documents`` is the one page →
+spans map: ``q_html_spans`` explodes its output, and ``q_web_extract``
+and the streaming front-end feed it to the OCR pipeline. ``_main_text``
+is the one page → (title, main text, paragraph count) map, over
+synthesized pages in ``extract_main_text`` and over WARC payloads in
+``q_warc_extract``.
 """
 
 from __future__ import annotations
@@ -62,16 +69,16 @@ def _corpus(
 # ---------------------------------------------------------------------------
 
 
-def extract_main_text(corpus: DataFrame) -> DataFrame:
-    """(doc_id:int, text) corpus → synthesize page → strip boilerplate →
-    clean article text. One narrow mapInPandas; no shuffle anywhere in
-    the plan (also the unit the scaling bench measures)."""
+def _main_text(pages: DataFrame, src_col: str, page_of) -> DataFrame:
+    """(doc_id:int, ``src_col``) rows → one (doc_id, title, main_text,
+    n_paras) row per page, where ``page_of(doc_id, src)`` gives the page's
+    HTML: the one page body behind extract_main_text and q_warc_extract."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out = extract_content(page_html(int(did), text))
+            for did, src in zip(pdf["doc_id"], pdf[src_col]):
+                out = extract_content(page_of(int(did), src))
                 paras = [t for k, t, _ in out["items"] if k == "text"]
                 rows.append(
                     (
@@ -85,9 +92,16 @@ def extract_main_text(corpus: DataFrame) -> DataFrame:
                 rows, columns=["doc_id", "title", "main_text", "n_paras"]
             )
 
-    return corpus.mapInPandas(
+    return pages.mapInPandas(
         run, "doc_id string, title string, main_text string, n_paras int"
     )
+
+
+def extract_main_text(corpus: DataFrame) -> DataFrame:
+    """(doc_id:int, text) corpus → synthesize page → strip boilerplate →
+    clean article text. One narrow mapInPandas; no shuffle anywhere in
+    the plan (also the unit the scaling bench measures)."""
+    return _main_text(corpus, "text", page_html)
 
 
 def q_html_main_text(
@@ -247,31 +261,10 @@ def q_html_spans(
     spark: SparkSession, sf_dir: str, max_docs: int = HTML_MAX_DOCS,
     partitions: int | None = None,
 ) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out = extract_content(page_html(int(did), text))
-                for seq, s in enumerate(_items_to_spans(out["items"])):
-                    rows.append(
-                        (
-                            f"doc-{int(did):06d}",
-                            seq,
-                            s["kind"],
-                            s["text"],
-                            s["media_ref"],
-                            s["offset"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "seq", "kind", "text", "media_ref", "offset"],
-            )
-
-    return _corpus(spark, sf_dir, max_docs, partitions).mapInPandas(
-        run,
-        "doc_id string, seq int, kind string, text string, media_ref string, "
-        "offset int",
+    """One row per span of html_to_documents, numbered by its position."""
+    docs = html_to_documents(_corpus(spark, sf_dir, max_docs, partitions))
+    return docs.select("doc_id", F.posexplode("spans").alias("seq", "s")).select(
+        "doc_id", "seq", "s.kind", "s.text", "s.media_ref", "s.offset"
     )
 
 
@@ -1309,31 +1302,10 @@ def q_warc_extract(
         (F.col("warc_type") == "response") & (F.col("http_status") == 200)
     ).select(
         F.regexp_extract("target_uri", r"/p/(\d+)$", 1).cast("long")
-        .alias("did"),
+        .alias("doc_id"),
         "payload",
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, html in zip(pdf["did"], pdf["payload"]):
-                out = extract_content(html)
-                paras = [t for k, t, _ in out["items"] if k == "text"]
-                rows.append(
-                    (
-                        f"doc-{int(did):06d}",
-                        out["title"],
-                        "\n\n".join(paras),
-                        len(paras),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "title", "main_text", "n_paras"]
-            )
-
-    return pages.mapInPandas(
-        run, "doc_id string, title string, main_text string, n_paras int"
-    )
+    return _main_text(pages, "payload", lambda _did, html: html)
 
 
 def _robots_txt(d: "F.Column") -> "F.Column":

@@ -5,13 +5,15 @@ The host's speed swings by up to 2x within minutes (perfbench/DESIGN.md),
 so only paired, alternating runs cancel it out. For each pair this runs
 ``perfbench/run.py --trace 0`` once on each side with the same seed; the
 seed changes from pair to pair, which side runs first alternates, and the
-two sides never run at the same time. The parent is extracted with
-``git archive`` into a temporary directory, removed at exit; the other
-side is the working tree this script lives in, uncommitted edits included.
+two sides never run at the same time. Both sides run from temporary
+copies, extracted from a tar the same way and removed at exit, so they
+differ only in code: the parent is ``git archive`` of its revision, the
+change is the working tree this script lives in (tracked files with
+their uncommitted edits, plus untracked files that are not ignored).
 
 For every metric it prints each side's median and IQR, the median of the
-paired ratios (this checkout / parent), how many pairs this checkout won,
-and whether its median is worse than the parent's by more than the
+paired ratios (change / parent), how many pairs the change won, and
+whether its median is worse than the parent's by more than the
 metric's ``BENCHMARK.json`` bound. The last stdout line is that summary as
 JSON. Exits 1 if any run is not ``correct`` or does not finish.
 
@@ -80,9 +82,25 @@ def _bounds() -> dict[str, tuple[str, float]]:
     return {m["name"]: (m["better"], m["bound"]) for m in bench["end_to_end"]}
 
 
-def _extract(rev: str, into: str) -> None:
-    tar = subprocess.run(["git", "-C", REPO, "archive", "--format=tar", rev],
-                         check=True, capture_output=True).stdout
+def _git(repo: str, *args: str) -> bytes:
+    return subprocess.run(["git", "-C", repo, *args], check=True,
+                          capture_output=True).stdout
+
+
+def _worktree_tar(repo: str) -> bytes:
+    """The working tree of ``repo`` as a tar: tracked files as they are on
+    disk (a deleted one is left out) and untracked files that are not
+    ignored."""
+    names = _git(repo, "ls-files", "-z", "--cached", "--others", "--exclude-standard")
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as t:
+        for name in sorted(set(names.decode().split("\0")) - {""}):
+            if os.path.lexists(os.path.join(repo, name)):
+                t.add(os.path.join(repo, name), arcname=name, recursive=False)
+    return buf.getvalue()
+
+
+def _extract(tar: bytes, into: str) -> None:
     with tarfile.open(fileobj=io.BytesIO(tar)) as t:
         t.extractall(into, filter="data")
 
@@ -117,10 +135,10 @@ def main() -> int:
     p.add_argument("--seed0", type=int, default=1, help="seed of the first pair")
     args = p.parse_args()
 
-    parent_dir = tempfile.mkdtemp(prefix="perf_ab_parent_")
+    roots = {side: tempfile.mkdtemp(prefix=f"perf_ab_{side}_") for side in SIDES}
     try:
-        _extract(args.parent_rev, parent_dir)
-        roots = {"parent": parent_dir, "change": REPO}
+        _extract(_git(REPO, "archive", "--format=tar", args.parent_rev), roots["parent"])
+        _extract(_worktree_tar(REPO), roots["change"])
         pairs, all_correct = [], True
         for i in range(args.pairs):
             seed = args.seed0 + i
@@ -137,7 +155,8 @@ def main() -> int:
             if len(pair) == 2:
                 pairs.append(pair)
     finally:
-        shutil.rmtree(parent_dir, ignore_errors=True)
+        for root in roots.values():
+            shutil.rmtree(root, ignore_errors=True)
 
     summary = summarize(pairs, _bounds()) if pairs else {}
     _print_table(args.workload, summary)

@@ -66,3 +66,35 @@ def test_stream_extract_releases_model_broadcasts(spark, font_model, tmp_path):
 
     assert spark.read.parquet(out).select("batch_id").distinct().count() == 2
     assert len(os.listdir(temp_dir)) == before
+
+
+def test_extract_runner_releases_model_broadcast(spark, font_model, tmp_path):
+    """ExtractRunner.run broadcasts the font model once per run and frees
+    it when the run returns and when it crashes, so a long-lived session
+    that runs many backfills keeps no model pickle per run."""
+    import os
+
+    from newocr_spark.fixtures import synth_fixture
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+    from newocr_spark.pipeline.state import ExtractRunner
+
+    d = str(tmp_path / "fx")
+    synth_fixture(d, n_docs=8, seed=5, model=font_model, verify=False)
+    docs = spark.read.parquet(f"{d}/documents.parquet")
+    media = spark.read.parquet(f"{d}/media.parquet")
+    temp_dir = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp_dir))
+
+    for i, fail_after in enumerate((None, 1, None)):
+        runner = ExtractRunner(
+            spark, font_model, str(tmp_path / f"out{i}"),
+            ParquetStateStore(spark, str(tmp_path / f"state{i}")),
+            n_buckets=2, group_size=1, fail_after_groups=fail_after,
+        )
+        if fail_after is None:
+            assert runner.run(docs, media, "snap", f"run-{i}")["buckets_done"] == 2
+        else:
+            with pytest.raises(RuntimeError, match="injected failure"):
+                runner.run(docs, media, "snap", f"run-{i}")
+
+    assert len(os.listdir(temp_dir)) == before

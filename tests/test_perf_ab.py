@@ -44,3 +44,36 @@ def test_only_metrics_present_on_both_sides_of_every_pair():
     pairs = [{"parent": {"a": 1, "b": 2}, "change": {"a": 1}},
              {"parent": {"a": 1}, "change": {"a": 2, "c": 3}}]
     assert list(summarize(pairs, {})) == ["a"]
+
+
+def test_change_side_is_the_working_tree_extracted_like_an_archive(tmp_path):
+    """The change side is a copy of the working tree: tracked files with
+    their uncommitted edits and untracked files that are not ignored;
+    ignored and deleted files stay out."""
+    import subprocess
+
+    from scripts.perf_ab import _extract, _worktree_tar
+
+    repo = tmp_path / "repo"
+    (repo / "pkg").mkdir(parents=True)
+    files = {".gitignore": "*.log\nbuild/\n", "pkg/kept.py": "v = 1\n",
+             "pkg/edited.py": "v = 1\n", "gone.py": "v = 1\n"}
+    for name, text in files.items():
+        (repo / name).write_text(text)
+    git = ["git", "-C", str(repo), "-c", "user.name=t", "-c", "user.email=t@t"]
+    subprocess.run([*git, "init", "-q"], check=True)
+    subprocess.run([*git, "add", "-A"], check=True)
+    subprocess.run([*git, "commit", "-q", "-m", "base"], check=True)
+    (repo / "pkg/edited.py").write_text("v = 2\n")
+    (repo / "gone.py").unlink()
+    (repo / "pkg/new.py").write_text("v = 3\n")
+    (repo / "run.log").write_text("ignored\n")
+    (repo / "build").mkdir()
+    (repo / "build/out.bin").write_text("ignored\n")
+
+    copy = tmp_path / "copy"
+    _extract(_worktree_tar(str(repo)), str(copy))
+
+    got = {str(p.relative_to(copy)): p.read_text() for p in copy.rglob("*") if p.is_file()}
+    assert got == {".gitignore": "*.log\nbuild/\n", "pkg/kept.py": "v = 1\n",
+                   "pkg/edited.py": "v = 2\n", "pkg/new.py": "v = 3\n"}
