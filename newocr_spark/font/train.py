@@ -16,7 +16,7 @@ from ..kernel.features import featurize_many
 from ..kernel.grid import binarize, rows_populated
 from ..kernel.lines import line_bounds
 from ..letters import LETTERS
-from ..model import FontConfig, FontModel
+from ..model import META_NAMES, FontConfig, FontModel
 from .render import RAW_STRING, TRAIN_STRING, TRAIN_SCALES, render_train_image
 
 # indices into the X-sorted per-line component list whose TRAIN_STRING chars
@@ -32,12 +32,6 @@ _CHAR_META = {
 }
 # 'the base is the second character (bottom part)' (OCRActions.java:97-99)
 _BASE_IS_SECOND = frozenset("ij:;=")
-
-_META_NAMES = (
-    "distanceAbove", "distancei", "distancej", "colonDistance",
-    "semicolonDistance", "equalsDistance", "distanceQuestion",
-    "distanceExclamation",
-)
 
 
 class _Piece:
@@ -142,10 +136,9 @@ def train_font(
         )
 
     trained: dict[tuple[str, int], _Trained] = {(" ", 0): _Trained()}
-    apostrophe_ratios: list[float] = []
     font_sizes: dict[tuple[str, int], list[float]] = {}
     custom_spaces: dict[str, list[float]] = {}
-    meta_lists: dict[str, list[float]] = {n: [] for n in _META_NAMES}
+    meta_lists: dict[str, list[float]] = {n: [] for n in META_NAMES}
 
     L = len(TRAIN_STRING)
     for line_no, (top, bottom, found) in enumerate(lines):
@@ -172,7 +165,7 @@ def train_font(
                     revert_index = True
                 else:
                     distance = sc.x - first_quote.x - first_quote.width
-                    apostrophe_ratios.append(first_quote.height / distance)
+                    meta_lists["apostropheRatio"].append(first_quote.height / distance)
                     modifier = 1
             elif letter_index == L - 2:  # first W: measure from here (:172-177)
                 before_space_x = sc.x + sc.width
@@ -273,7 +266,6 @@ def train_font(
         max_c[idx] = t.max_center
 
     meta = {n: float(np.mean(v)) for n, v in meta_lists.items() if v}
-    meta["apostropheRatio"] = float(np.mean(apostrophe_ratios))
 
     return FontModel(
         font=config.name,

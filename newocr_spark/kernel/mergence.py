@@ -9,12 +9,12 @@ to: UnderDot(LOW), EqualVertical(LOW), OverDot(HIGH), Apostrophe(HIGH),
 Percent(HIGH). (The enum's HIGHEST==-2 quirk means HIGH-priority rules
 actually run last; replicated as computed, not as documented.)
 
-After each rule, its merged-away pieces are removed from the line lists
-(removeFromSorted:127-138, with the lazy-stream sequencing of
-beginMergence:78); emptied lines are dropped only when removeFromSorted
-itself did the removal. The final cleanup pass (processLetter:88-108)
-relabels leftover dots to '.' and pops the next-closest NN match for pieces
-that should only exist merged.
+After each rule, its merged-away pieces are gone from the line lists
+(removeFromSorted:127-138, in beginMergence:78's lazy-stream order): a
+horizontal rule deletes them in its sweep and never empties a line (the
+base stays); one filter drops a vertical rule's, with the lines it empties.
+The cleanup pass (processLetter:88-108) relabels leftover dots to '.' and
+pops the next-closest NN match for pieces that should only exist merged.
 
 Piece-class neighbourhoods: every rule needs a piece-class letter and
 returns None, with no side effect, without one — the vertical rules a dot
@@ -33,10 +33,12 @@ indices of the letters overlapping it in X, from the geometry before any
 merge. One `related` mask over the letter indices stands for the
 reference's removeAll over every relation list
 (DefaultMergenceManager.java:117): a vertical rule's removals clear it, and
-a vertical target sees only the still-related letters of its relation. A
-horizontal rule's sweep runs over the line lists it was given, so its
-removals leave `related` as it is: with a horizontal rule ordered before a
-vertical one, its merged-away letters stay in the vertical relations.
+a vertical target gets [previous, target, next] of its still-related
+letters. A horizontal rule's sweep runs over the line lists it was given,
+so its removals leave `related` as it is: with a horizontal rule ordered
+before a vertical one, its merged-away letters stay in the vertical
+relations. The sweep finds each target from a cursor, since a merge
+removes only letters within one place of its target.
 
 Determinism note: the reference iterates ConcurrentHashMaps (nondeterministic
 order); we iterate letters in reading order (line insertion order, then
@@ -280,10 +282,11 @@ def _percent_targets(ctx: _Ctx, line):
 # classes, registered reflectively from config
 # (HOCONFontConfiguration.java:156-170). Vertical rules (line_targets None)
 # run over x-overlap relations; horizontal ones over line lists, visiting
-# only line_targets(ctx, line). The execution order comes from
-# FontConfig.merge_rules — its default is the computed priority order
-# UnderDot(-1), EqualVertical(-1), OverDot(1), Apostrophe(1), Percent(1)
-# (see module docstring).
+# only line_targets(ctx, line). Vertical rules read only data[pos ± 1] and
+# len(data), so each gets a window of at most three letters. The execution
+# order comes from FontConfig.merge_rules — its default is the computed
+# priority order UnderDot(-1), EqualVertical(-1), OverDot(1), Apostrophe(1),
+# Percent(1) (see module docstring).
 RULE_REGISTRY = {
     "UnderDotMergeRule": (_under_dot, None),
     "EqualVerticalMergeRule": (_equal_vertical, None),
@@ -340,44 +343,41 @@ def run_mergence(sorted_lines, model):
 
     for rule_name in model.config.merge_rules:
         rule_fn, line_targets = RULE_REGISTRY[rule_name]
-        removing: list = []
         if line_targets is not None:
             # iterate lines in insertion order = reading order, visiting
             # only the targets the rule can fire on (module docstring)
             for _y, line in sorted_lines:
+                pos = 0
                 for letter in line_targets(ctx, line):
                     if letter in removed:
                         continue
-                    result = rule_fn(ctx, letter, line, line.index(letter))
+                    pos = line.index(letter, max(pos - 1, 0))
+                    result = rule_fn(ctx, letter, line, pos)
                     if result:
-                        # rules only return letters of the list they were
-                        # given, so the removeAll sweep only touches it
                         for r in result:
-                            line.remove(r)
-                        removing += result
+                            del line[line.index(r, max(pos - 1, 0))]
                         removed.update(result)
         else:
+            n_removed = len(removed)
             for i, rel in vertical.items():
                 letter = letters[i]
                 if letter in removed:
                     continue
                 rel = rel[related[rel]].tolist()
-                data = [letters[j] for j in rel]
-                result = rule_fn(ctx, letter, data, rel.index(i))
+                p = rel.index(i)
+                window = rel[max(p - 1, 0) : p + 2]
+                data = [letters[j] for j in window]
+                result = rule_fn(ctx, letter, data, min(p, 1))
                 if result:
                     for r in result:
-                        related[rel[data.index(r)]] = False
-                    removing += result
+                        related[window[data.index(r)]] = False
                     removed.update(result)
-        # removeFromSorted: only drops a line when the removal happened here
-        for r in removing:
-            for entry in list(sorted_lines):
-                _y, line = entry
-                if r in line:
-                    line.remove(r)
-                    if not line:
-                        sorted_lines.remove(entry)
-                    break
+            if len(removed) > n_removed:
+                # removeFromSorted: drops a line only when it emptied it
+                sorted_lines[:] = [
+                    (y, kept) for y, line in sorted_lines
+                    if (kept := [l for l in line if l not in removed]) or not line
+                ]
 
     # cleanup pass (processLetter)
     for _y, line in sorted_lines:

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from abc import ABC, abstractmethod
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -120,9 +121,13 @@ class ParquetStateStore(StateStore):
         self.path = path
 
     def read(self) -> DataFrame:
+        # only a log never written reads as empty; an unreadable one raises
+        # (at the first action) instead of reading as "no bucket done"
         try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+            return self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], STATE_SCHEMA)
 
     def append(self, rows: list[dict]) -> None:

@@ -12,10 +12,16 @@ change is the working tree this script lives in (tracked files with
 their uncommitted edits, plus untracked files that are not ignored).
 
 For every metric it prints each side's median and IQR, the median of the
-paired ratios (change / parent), how many pairs the change won, and
-whether its median is worse than the parent's by more than the
-metric's ``BENCHMARK.json`` bound. The last stdout line is that summary as
-JSON. Exits 1 if any run is not ``correct`` or does not finish.
+paired ratios (change / parent), how many pairs the change won, whether
+its median is worse than the parent's by more than the metric's
+``BENCHMARK.json`` bound, and whether that bound is unresolved: the
+parent's IQR is wider than the bound and not every change run beats every
+parent run. Just before each run, never during one, it times a fixed
+single-core loop in this process; each pair's host-speed ratio is the
+parent's loop time over the change's (above 1: the host ran faster for the
+change), so a pair in which the host moved shows. The last stdout line is
+the summary as JSON, with the median host-speed ratio. Exits 1 if any run
+is not ``correct`` or does not finish.
 
 Usage:
   python3 scripts/perf_ab.py <parent-rev> --workload W --pairs N [--seconds 10] [--seed0 S]
@@ -33,6 +39,7 @@ import subprocess
 import sys
 import tarfile
 import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SIDES = ("parent", "change")
@@ -50,7 +57,7 @@ def summarize(pairs: list[dict], bounds: dict[str, tuple[str, float]]) -> dict:
     "change": metrics}`` with ``metrics`` a ``{name: value}`` dict, and
     ``bounds`` maps a metric to ``(better, bound)`` as in BENCHMARK.json
     ("higher" or "lower", a fraction). Metrics without a bound get
-    ``"better": None`` and are never judged worse."""
+    ``"better": None`` and are never judged worse or unresolved."""
     out = {}
     for name in sorted(set.intersection(*(set(p[s]) for p in pairs for s in SIDES))):
         parent = [p["parent"][name] for p in pairs]
@@ -62,16 +69,21 @@ def summarize(pairs: list[dict], bounds: dict[str, tuple[str, float]]) -> dict:
         pm, cm = statistics.median(parent), statistics.median(change)
         if better == "higher":
             worse = cm < pm * (1 - bound)
+            separated = min(change) > max(parent)
         elif better == "lower":
             worse = cm > pm * (1 + bound)
+            separated = max(change) < min(parent)
         else:
-            worse = False
+            worse = separated = False
+        parent_iqr = _iqr(parent)
+        unresolved = bool(better) and parent_iqr > bound * pm and not separated
         out[name] = {
-            "parent_median": pm, "parent_iqr": _iqr(parent),
+            "parent_median": pm, "parent_iqr": parent_iqr,
             "change_median": cm, "change_iqr": _iqr(change),
             "ratio_median": statistics.median(ratios),
             "won": won, "pairs": len(pairs),
             "better": better, "bound": bound, "worse_past_bound": worse,
+            "unresolved": unresolved,
         }
     return out
 
@@ -105,6 +117,16 @@ def _extract(tar: bytes, into: str) -> None:
         t.extractall(into, filter="data")
 
 
+def _host_probe_s() -> float:
+    """Wall seconds of a fixed pure-Python loop on one core: the host's
+    speed just before a run."""
+    t0 = time.perf_counter()
+    x = 0
+    for i in range(3_000_000):
+        x ^= i * i
+    return time.perf_counter() - t0
+
+
 def _run(root: str, workload: str, seed: int, seconds: float) -> dict | None:
     """One ``perfbench/run.py`` run in ``root``: its result JSON, or None."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
@@ -118,12 +140,13 @@ def _run(root: str, workload: str, seed: int, seconds: float) -> dict | None:
 
 def _print_table(workload: str, summary: dict) -> None:
     print(f"{workload}: metric  parent median (IQR)  change median (IQR)  "
-          f"ratio  won  worse past bound")
+          f"ratio  won  worse past bound  unresolved")
     for name, s in summary.items():
         won = "-" if s["won"] is None else f"{s['won']}/{s['pairs']}"
         print(f"  {name}  {s['parent_median']:.4g} ({s['parent_iqr']:.3g})  "
               f"{s['change_median']:.4g} ({s['change_iqr']:.3g})  "
-              f"{s['ratio_median']:.3f}  {won}  {s['worse_past_bound']}")
+              f"{s['ratio_median']:.3f}  {won}  {s['worse_past_bound']}  "
+              f"{s['unresolved']}")
 
 
 def main() -> int:
@@ -139,12 +162,13 @@ def main() -> int:
     try:
         _extract(_git(REPO, "archive", "--format=tar", args.parent_rev), roots["parent"])
         _extract(_worktree_tar(REPO), roots["change"])
-        pairs, all_correct = [], True
+        pairs, host_ratios, all_correct = [], [], True
         for i in range(args.pairs):
             seed = args.seed0 + i
             order = SIDES if i % 2 == 0 else SIDES[::-1]
-            pair = {}
+            pair, probe = {}, {}
             for side in order:
+                probe[side] = _host_probe_s()
                 result = _run(roots[side], args.workload, seed, args.seconds)
                 ok = result is not None and result["correct"] and result["failed"] == 0
                 all_correct &= ok
@@ -152,6 +176,10 @@ def main() -> int:
                     pair[side] = {k: v["value"] for k, v in result["metrics"].items()}
                 print(f"pair {i + 1} seed {seed} {side}: correct={ok} "
                       f"{pair.get(side)}", file=sys.stderr, flush=True)
+            host_ratios.append(probe["parent"] / probe["change"])
+            print(f"pair {i + 1} host-speed ratio {host_ratios[-1]:.3f} (probe parent "
+                  f"{probe['parent']:.3f} s, change {probe['change']:.3f} s)",
+                  file=sys.stderr, flush=True)
             if len(pair) == 2:
                 pairs.append(pair)
     finally:
@@ -160,8 +188,11 @@ def main() -> int:
 
     summary = summarize(pairs, _bounds()) if pairs else {}
     _print_table(args.workload, summary)
+    host_ratio = statistics.median(host_ratios) if host_ratios else None
+    print(f"host-speed ratio (parent probe / change probe), median over pairs: {host_ratio}")
     print(json.dumps({"workload": args.workload, "parent_rev": args.parent_rev,
-                      "pairs": len(pairs), "all_correct": all_correct, "metrics": summary}))
+                      "pairs": len(pairs), "all_correct": all_correct,
+                      "host_speed_ratio_median": host_ratio, "metrics": summary}))
     return 0 if all_correct else 1
 
 

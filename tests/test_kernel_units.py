@@ -296,6 +296,24 @@ def test_long_line_mergence_memory_is_bounded():
     assert peak < 32 * 2**20
 
 
+def test_long_line_mergence_time_is_linear():
+    """A line of 40,000 'l's is 40,000 Apostrophe targets: the sweep finds
+    each from a cursor, where a line.index scan from the head of the line
+    for every target makes the pass quadratic in the line."""
+    import time
+
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.kernel.mergence import run_mergence
+    from newocr_spark.kernel.scan import ImageLetter
+
+    line = [ImageLetter("l", 0, 3 * k, 0, 2, 10) for k in range(40_000)]
+    t0 = time.perf_counter()
+    out = run_mergence([(5, line)], get_model())
+    elapsed = time.perf_counter() - t0
+    assert len(out) == 1 and len(out[0][1]) == 40_000
+    assert elapsed < 4.0
+
+
 def test_components_in_no_line_are_not_ranked(monkeypatch):
     """Only components that land in a line are featurized and ranked. A
     noise grid inked down to its last row has no line (a run still open at

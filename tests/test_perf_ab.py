@@ -33,10 +33,33 @@ def test_worse_past_bound_follows_the_direction():
     assert not faster_setup["worse_past_bound"] and faster_setup["won"] == 3
 
 
+def test_parent_spread_wider_than_the_bound_is_unresolved():
+    # parent IQR 40 (inclusive quartiles 80 and 120) on a median 100 > 0.25 * 100
+    wide = summarize(_pairs([60, 80, 100, 120, 140], [70, 90, 95, 130, 150]),
+                     BOUNDS)["docs_per_s"]
+    assert wide["parent_iqr"] == pytest.approx(40)
+    assert wide["unresolved"] and not wide["worse_past_bound"]
+    narrow = summarize(_pairs([95, 100, 105], [90, 95, 100]), BOUNDS)["docs_per_s"]
+    assert not narrow["unresolved"]
+
+
+def test_full_separation_resolves_a_wide_spread():
+    """Every change run beats every parent run: resolved however wide the
+    parent's spread, in either direction."""
+    up = summarize(_pairs([60, 80, 100, 120, 140], [141, 150, 160, 170, 180]),
+                   BOUNDS)["docs_per_s"]
+    assert not up["unresolved"]
+    setup = summarize(_pairs([3, 4, 5, 6, 7], [1, 2, 2.5, 2, 2.9], "setup_s"),
+                      BOUNDS)["setup_s"]
+    assert not setup["unresolved"]
+    tie = summarize(_pairs([3, 4, 5, 6, 7], [1, 2, 2.5, 2, 3], "setup_s"), BOUNDS)["setup_s"]
+    assert tie["unresolved"]
+
+
 def test_unbounded_metric_is_reported_but_never_judged():
     s = summarize(_pairs([1.0, 2.0], [9.0, 9.0], "pass_s"), BOUNDS)["pass_s"]
     assert s["better"] is None and s["won"] is None
-    assert not s["worse_past_bound"]
+    assert not s["worse_past_bound"] and not s["unresolved"]
     assert s["parent_iqr"] == pytest.approx(0.5) and s["change_iqr"] == 0
 
 

@@ -121,6 +121,23 @@ def test_resume_no_dup_no_loss(spark, font_model, fixture_dir, tmp_path, store):
     assert set(r.partition_id for r in st.collect()) == set(range(8))
 
 
+def test_parquet_state_unreadable_log_raises(spark, tmp_path):
+    """Only a state log never written reads as "nothing done": an empty
+    directory reads as empty, and a corrupt file in the log raises instead
+    of making every resume recompute all buckets."""
+    from py4j.protocol import Py4JJavaError
+
+    from newocr_spark.pipeline.sinks import ParquetStateStore
+
+    path = tmp_path / "state"
+    assert ParquetStateStore(spark, str(path)).completed_buckets("s") == set()
+    path.mkdir()
+    assert ParquetStateStore(spark, str(path)).completed_buckets("s") == set()
+    (path / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="part-0.parquet"):
+        ParquetStateStore(spark, str(path)).completed_buckets("s")
+
+
 @pytest.mark.parametrize("store", ["parquet", "sqlite"])
 def test_idempotent_rerun(spark, font_model, fixture_dir, tmp_path, store):
     """Re-running an already-complete snapshot does nothing."""
