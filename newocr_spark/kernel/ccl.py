@@ -21,9 +21,14 @@ that order, and each component's runs are kept bbox-relative as rows of
 one compact int32 ``(row, start, end)`` array, cut by ``breaks``. A run is
 a maximal horizontal stretch of one component's pixels, so a component's
 runs determine its cropped grid and vice versa: ``signatures()`` is an
-exact key for (height, width, grid) that touches no grid. Grids are built
-only on demand (``grid(i)``, or ``grids(idx)`` for a whole batch of glyph
-cache misses at once, scattered into one shared buffer).
+exact key for (height, width, grid) that touches no grid. It has two run
+encodings, chosen per component by its own height and width: uint8 bytes
+(3 B per run) when both are at most 255, which bounds every bbox-relative
+value, else the int32 rows' bytes (12 B per run). Both are lossless and
+the choice follows from (height, width), which the key also holds, so two
+keys of one shape always share an encoding. Grids are built only on
+demand (``grid(i)``, or ``grids(idx)`` for a whole batch of glyph cache
+misses at once, scattered into one shared buffer).
 """
 
 from __future__ import annotations
@@ -55,12 +60,23 @@ class Components:
         return len(self.x)
 
     def signatures(self) -> list[bytes]:
-        """Per component: its runs' bytes. Equal (height, width, signature)
-        exactly when the cropped grids are equal."""
-        step = self.runs.itemsize * self.runs.shape[1]
-        buf = self.runs.tobytes()
-        b = (self.breaks * step).tolist()
-        return [buf[s:e] for s, e in zip(b[:-1], b[1:])]
+        """Per component: its runs' bytes, as uint8 (3 B per run) when its
+        height and width are both at most 255, else as int32 (12 B per
+        run). Equal (height, width, signature) exactly when the cropped
+        grids are equal. The uint8 cast wraps the values of a larger
+        component, so a component takes its bytes from it only when its
+        own bbox fits; the int32 buffer is built only when one does not."""
+        small = ((self.height <= 255) & (self.width <= 255)).tolist()
+        u8 = self.runs.astype(np.uint8).tobytes()
+        b8 = (self.breaks * 3).tolist()
+        if all(small):
+            return [u8[s:e] for s, e in zip(b8[:-1], b8[1:])]
+        i32 = self.runs.tobytes()
+        b32 = (self.breaks * 12).tolist()
+        return [
+            u8[b8[i] : b8[i + 1]] if fits else i32[b32[i] : b32[i + 1]]
+            for i, fits in enumerate(small)
+        ]
 
     def grid(self, i: int) -> np.ndarray:
         """Cropped (height, width) bool grid of component ``i``."""

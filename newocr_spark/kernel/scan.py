@@ -5,6 +5,7 @@ image's component arrays, with Python-level work paid per glyph-cache miss
 and per matched letter, not per pixel or per component object. Pipeline:
 
   line_bounds (G1) → connected_components (G2/G3)
+  → component budget (codecs/limits.py: MAX_COMPONENTS)
   → line assignment, consume-on-match (J2/X1, OCRScan.java:142-166)
   → featurize (G5) of the components that landed in a line
   → vectorized NN vs the broadcast font model (J1, OCRActions.java:197-269)
@@ -40,6 +41,7 @@ from itertools import repeat
 
 import numpy as np
 
+from ..codecs.limits import check_components
 from ..model import FontModel
 from .ccl import connected_components
 from .features import featurize_many
@@ -53,8 +55,10 @@ class ImageLetter:
     """A matched glyph (character/ImageLetter.java): the state mergence,
     spacing, font size and rendering read. ``letter``/``mod`` are the head
     of ``cands``, the NN candidate order as row indices into the font
-    model's label table; setNextClosest (ImageLetter.java:203-205)
-    advances the pointer. Synthetic spaces have no candidates."""
+    model's label table: ``bytes`` of uint8 rows when the model has at
+    most 256 rows, else an int16 array; either way ``cands[pos]`` is an
+    int. setNextClosest (ImageLetter.java:203-205) advances the pointer.
+    Synthetic spaces have no candidates."""
 
     __slots__ = (
         "letter", "mod", "x", "y", "width", "height",
@@ -71,7 +75,7 @@ class ImageLetter:
         self.amount_of_merges = 0
         # pieces merged into this letter: [(letter, mod, height)] incl. self
         self.merged_pieces: list[tuple[str, int, int]] | None = None
-        self._cands = cands      # np int array of model rows, best-first
+        self._cands = cands      # model rows, best-first: uint8 bytes or int16 array
         self._cand_pos = 0       # current head position in _cands
 
     def has_next_closest(self) -> bool:
@@ -117,8 +121,12 @@ class ImageLetter:
 # model with another config never reuses them. The signature is the
 # glyph's bbox-relative runs as bytes (ccl.Components.signatures), equal
 # exactly when the cropped grids are equal, so a lookup is exact and
-# touches no grid. An entry is the key (about 12 B per run) plus the (N,)
-# int16 order; the LRU cap keeps long-running executors bounded.
+# touches no grid. An entry is the key (3 B per run for a glyph box of at
+# most 255 x 255, else 12 B) plus the (N,) order as uint8 bytes (int16
+# for a model of more than 256 rows). Over salted scale-4 renders against
+# the 105-row default model that is about 500 traced bytes per entry
+# (test_glyph_cache_entry_bytes), so a worker at the LRU cap holds about
+# 100 MB of cache; the cap keeps long-running executors bounded.
 _CAND_CACHE: OrderedDict = OrderedDict()
 _CAND_CACHE_MAX = 200_000
 
@@ -157,10 +165,11 @@ def _order_rows(scores: np.ndarray, letter_codes: np.ndarray, mods: np.ndarray) 
     return np.lexsort(keys, axis=-1).astype(np.int16)
 
 
-def _candidates_for(comps, idx: np.ndarray, model: FontModel) -> list[np.ndarray]:
+def _candidates_for(comps, idx: np.ndarray, model: FontModel) -> list:
     """Candidate order per component in ``idx``, via the worker-local glyph
     cache. The misses are featurized and ranked together, each distinct
-    key once."""
+    key once; a model of at most 256 rows stores each order as uint8
+    bytes."""
     sigs = comps.signatures()
     keys = list(zip(
         repeat(model.digest), comps.height[idx].tolist(), comps.width[idx].tolist(),
@@ -179,6 +188,10 @@ def _candidates_for(comps, idx: np.ndarray, model: FontModel) -> list[np.ndarray
         miss = np.fromiter(misses.values(), np.int64, len(misses))
         feats = featurize_many(comps.grids(miss))
         orders = _rank_candidates(model, feats, comps.width[miss] / comps.height[miss])
+        n = orders.shape[1]
+        if n <= 256:
+            buf = orders.astype(np.uint8).tobytes()
+            orders = [buf[k * n : (k + 1) * n] for k in range(len(miss))]
         ranked = dict(zip(misses, orders))
         _CAND_CACHE.update(ranked)
         while len(_CAND_CACHE) > _CAND_CACHE_MAX:
@@ -196,8 +209,10 @@ def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageL
     bounds = line_bounds(
         rows_populated(grid), model.config.max_percent_diff_to_merge
     )
-    # G2/G3 — components in discovery order
+    # G2/G3 — components in discovery order; a page over the component
+    # budget is refused before any per-component work
     comps = connected_components(grid)
+    check_components(len(comps))
 
     # J2 — line assignment: lines sorted by rounded center; each remaining
     # glyph whose vertical center falls in-bounds is consumed in discovery

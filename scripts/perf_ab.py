@@ -16,8 +16,9 @@ paired ratios (change / parent), how many pairs the change won, whether
 its median is worse than the parent's by more than the metric's
 ``BENCHMARK.json`` bound, and whether that bound is unresolved: the
 parent's IQR is wider than the bound and not every change run beats every
-parent run. Just before each run, never during one, it times a fixed
-single-core loop in this process; each pair's host-speed ratio is the
+parent run. Just before each run, never during one, it pauses 1 s and
+times a fixed single-core loop five times in this process, keeping the
+fastest; each pair's host-speed ratio is the
 parent's loop time over the change's (above 1: the host ran faster for the
 change), so a pair in which the host moved shows. The last stdout line is
 the summary as JSON, with the median host-speed ratio. Exits 1 if any run
@@ -118,13 +119,18 @@ def _extract(tar: bytes, into: str) -> None:
 
 
 def _host_probe_s() -> float:
-    """Wall seconds of a fixed pure-Python loop on one core: the host's
-    speed just before a run."""
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(3_000_000):
-        x ^= i * i
-    return time.perf_counter() - t0
+    """The host's speed just before a run: after a 1 s pause, so the
+    previous run's teardown has settled, the fastest of five wall timings
+    of a fixed pure-Python loop on one core."""
+    time.sleep(1.0)
+    times = []
+    for _ in range(5):
+        t0 = time.perf_counter()
+        x = 0
+        for i in range(600_000):
+            x ^= i * i
+        times.append(time.perf_counter() - t0)
+    return min(times)
 
 
 def _run(root: str, workload: str, seed: int, seconds: float) -> dict | None:

@@ -210,6 +210,89 @@ def test_declared_pixels_over_budget_is_image_too_large(model):
     assert out["error"][2].startswith("ImageTooLarge: 100000x100000")
 
 
+def _letter_page(face) -> np.ndarray:
+    """RAW_STRING wrapped over a US Letter page at 96 dpi (816 x 1056 px)
+    at scale 1: as many lines as fit, each as many characters as fit."""
+    from newocr_spark.font.glyphs import MARGIN_LEFT
+    from newocr_spark.font.render import RAW_STRING, render_line, render_text_image
+
+    text, lines, pos = RAW_STRING * 100, [], 0
+    for _ in range((1056 - 2 + face.line_gap) // (face.cell_height + face.line_gap)):
+        lo, hi = 1, len(RAW_STRING) * 2
+        while lo < hi:
+            mid = (lo + hi + 1) // 2
+            if render_line(text[pos : pos + mid], face).shape[1] + MARGIN_LEFT + 1 <= 816:
+                lo = mid
+            else:
+                hi = mid - 1
+        lines.append(text[pos : pos + lo])
+        pos += lo
+    return render_text_image(lines, 1, face)
+
+
+def test_component_budget_is_ten_full_pages():
+    """``MAX_COMPONENTS`` is ten times the densest full page of text, and
+    no golden, face or fuzz case comes within a tenth of it: the full
+    pages of every face, RAW_STRING at every trained scale, the training
+    images, and the fuzz and salted-noise images."""
+    from newocr_spark.codecs.limits import MAX_COMPONENTS
+    from newocr_spark.font.glyphs import FACES
+    from newocr_spark.font.perturb import salt
+    from newocr_spark.font.render import (
+        RAW_STRING, TRAIN_SCALES, render_text_image, render_train_image,
+    )
+    from newocr_spark.kernel.ccl import connected_components
+
+    def count(img):
+        return len(connected_components(binarize(img)))
+
+    pages = {name: count(_letter_page(face())) for name, face in FACES.items()}
+    assert max(pages.values()) == pages["SparkGrid"] == 4_686
+    assert MAX_COMPONENTS >= 10 * max(pages.values())
+    cases = list(pages.values())
+    for face in FACES.values():
+        f = face()
+        cases.append(count(render_train_image(f)))
+        cases += [count(render_text_image([RAW_STRING], s, f)) for s in TRAIN_SCALES]
+    cases.append(count(render_text_image(["fuzz 42"], 2)))
+    cases.append(count(salt(render_text_image([RAW_STRING], 4), 0.03, 0)))
+    assert max(cases) <= MAX_COMPONENTS / 10
+
+
+def test_noise_page_over_component_budget_is_error_row(model):
+    """A 2000 x 2000 page of random ink (density 0.3, blank bottom row)
+    holds 190,000 components: ``ImageTooComplex`` (a ``ValueError``) is
+    raised right after labelling, so the page becomes an error row in
+    seconds on one core, and the good image in the batch still scans."""
+    import time
+
+    import pandas as pd
+
+    from newocr_spark.codecs import ImageTooComplex
+    from newocr_spark.font.render import render_text_png
+    from newocr_spark.pipeline.extract import make_ocr_udf
+
+    black = np.random.default_rng(0).random((2000, 2000)) < 0.3
+    black[-1] = False
+    noise = encode_png(np.where(black, np.uint8(0), np.uint8(255)))
+    assert issubclass(ImageTooComplex, ValueError)
+
+    class _Broadcast:
+        value = model
+
+    batch = pd.DataFrame({
+        "doc_id": ["d1", "d2"], "offset": [0, 0], "media_ref": ["m-noise", "m-good"],
+        "png": [noise, render_text_png(["ok 1"], 2)],
+    })
+    t0 = time.perf_counter()
+    (out,) = list(make_ocr_udf(_Broadcast())(iter([batch])))
+    elapsed = time.perf_counter() - t0
+    assert out["text"].tolist() == [None, "ok 1"]
+    assert out["error"][0].startswith("ImageTooComplex: 190000 connected components exceed")
+    assert out["error"][1] is None
+    assert elapsed < 10.0
+
+
 def test_hostile_media_fuzz_through_map_in_pandas(spark, model):
     """Mutated PNG and BMP bytes (truncated, byte-flipped, huge declared
     dimensions) through the real ``mapInPandas`` OCR plan: every output row

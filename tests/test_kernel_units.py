@@ -1,6 +1,8 @@
 """Operator unit tests (FIXTURES.md §7) — the reference has none of these
 (SURVEY §5); hand-checked expectations per operator."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -10,6 +12,8 @@ from newocr_spark.kernel.features import featurize
 from newocr_spark.kernel.grid import binarize, remove_leading_spaces
 from newocr_spark.kernel.lines import line_bounds
 from newocr_spark.kernel.spacing import space_round
+
+PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
 
 
 def g(rows):
@@ -393,3 +397,121 @@ def test_model_digest_differs_across_faces():
     digests = {name: get_model(name).digest for name in artifacts._DIRS}
     assert len(digests) == 6
     assert len(set(digests.values())) == len(digests)
+
+
+def _bars(widths):
+    """One row of horizontal bars of the given widths, two blank columns
+    apart: one component per bar, in the given order."""
+    grid = np.zeros((3, sum(widths) + 2 * len(widths)), dtype=bool)
+    x = 0
+    for w in widths:
+        grid[1, x : x + w] = True
+        x += w + 2
+    return grid
+
+
+def test_glyph_cache_lru_cap(monkeypatch):
+    """The glyph cache never holds more than ``_CAND_CACHE_MAX`` entries;
+    it evicts the entry least recently inserted or hit, so the oldest
+    untouched entry goes first and one refreshed by a hit survives."""
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.kernel import scan
+
+    monkeypatch.setattr(scan, "_CAND_CACHE", type(scan._CAND_CACHE)())
+    monkeypatch.setattr(scan, "_CAND_CACHE_MAX", 3)
+    m = get_model()
+    comps = connected_components(_bars([1, 2, 3, 4, 5, 6, 7, 8, 9]))
+    keys = [(m.digest, 1, w, sig) for w, sig in zip(comps.width.tolist(), comps.signatures())]
+
+    def lookup(*which):
+        scan._candidates_for(comps, np.array(which, dtype=np.int64), m)
+        assert len(scan._CAND_CACHE) <= 3
+        return list(scan._CAND_CACHE)
+
+    assert lookup(0) == keys[:1]
+    assert lookup(1, 2) == keys[:3]
+    assert lookup(0) == [keys[1], keys[2], keys[0]]  # a hit refreshes 0
+    assert lookup(3) == [keys[2], keys[0], keys[3]]  # 1, the oldest untouched, goes
+    assert lookup(4, 5, 6, 7, 8) == keys[6:9]  # more misses than the cap at once
+
+
+def test_glyph_cache_entry_bytes(monkeypatch):
+    """A glyph-cache entry holds uint8 run bytes in its key and uint8 model
+    rows as its candidate order: over 40 salted scale-4 renders (nearly
+    every glyph unique) from a cleared cache, the traced bytes the scans
+    leave behind, per entry, stay under 700 (int32 runs and int16 orders
+    take about 1,200)."""
+    import tracemalloc
+
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.font.render import render_text_image
+    from newocr_spark.kernel import scan
+
+    monkeypatch.syspath_prepend(PERFBENCH)
+    import inputs
+
+    m = get_model()
+    texts = inputs.corpus_texts(7, 40)
+    grids = [
+        binarize(inputs.interior_salt(render_text_image([t], inputs.SALT_SCALE), inputs.SALT_RATE, d))
+        for d, t in enumerate(texts)
+    ]
+    monkeypatch.setattr(scan, "_CAND_CACHE", type(scan._CAND_CACHE)())
+    scan.scan_grid(grids[0], m)  # first-call state outside the trace
+    scan._CAND_CACHE.clear()
+    tracemalloc.start()
+    try:
+        for grid in grids:
+            scan.scan_grid(grid, m)
+        held, _peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert len(scan._CAND_CACHE) > 5_000
+    assert held / len(scan._CAND_CACHE) < 700
+
+
+def test_glyph_cache_keys_exact_at_the_uint8_edge(monkeypatch):
+    """Run signatures switch from uint8 to int32 bytes past 255 rows or
+    columns. At 255, 256 and 257 the key stays exact: equal grids give
+    equal keys, grids that differ give different keys (a 257-wide pair
+    whose runs agree modulo 256 among them), and warm lookups return the
+    orders a cold scan ranks."""
+    from newocr_spark.artifacts import get_model
+    from newocr_spark.kernel import scan
+    from newocr_spark.kernel.features import featurize_many
+
+    def stamp(h, w, col):
+        s = np.zeros((h, w), dtype=bool)
+        s[-1] = True  # a full bottom row joins the two columns
+        s[:, 0] = s[:, col] = True
+        return s
+
+    stamps = [stamp(h, w, n) for h, w in ((255, 255), (256, 256), (255, 256), (256, 255),
+                                          (257, 257), (4, 256), (256, 4))
+              for n in (0, 1, min(h, w) - 1) for _copy in (0, 1)]
+    odd = np.zeros((2, 257), dtype=bool)
+    odd[1] = True
+    twin = odd.copy()
+    odd[0, 0], twin[0, 256] = True, True  # runs (0, 0, 1) and (0, 256, 257)
+    stamps += [odd, twin]
+    grid = np.zeros((259, sum(s.shape[1] + 2 for s in stamps)), dtype=bool)
+    x = 0
+    for s in stamps:
+        grid[1 : 1 + s.shape[0], x : x + s.shape[1]] = s
+        x += s.shape[1] + 2
+    comps = connected_components(grid)
+    assert len(comps) == len(stamps)
+    keys = list(zip(comps.height.tolist(), comps.width.tolist(), comps.signatures()))
+    for i, gi in enumerate(stamps):
+        for j, gj in enumerate(stamps):
+            same = gi.shape == gj.shape and np.array_equal(gi, gj)
+            assert (keys[i] == keys[j]) == same
+
+    m = get_model()
+    idx = np.arange(len(comps))
+    want = scan._rank_candidates(m, featurize_many(comps.grids(idx)), comps.width / comps.height)
+    monkeypatch.setattr(scan, "_CAND_CACHE", type(scan._CAND_CACHE)())
+    cold = scan._candidates_for(comps, idx, m)
+    warm = scan._candidates_for(comps, idx, m)
+    for w, c, h in zip(want, cold, warm):
+        assert list(c) == list(h) == w.tolist()
